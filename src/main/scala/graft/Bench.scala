@@ -205,37 +205,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // snapshot the previous round's per-key detail BEFORE overwriting it
     val prevDetail = readPrevDetail("BENCH_DETAIL.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bare count()/min/max over parquet resolve from footer statistics
-      // instead of scanning — the subset report and row-count surfaces are
-      // metadata-only at any scale
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // CPU-bound analytic kernels (simhash/jaccard/minhash joins) are
-      // tiny in BYTES but heavy per row; the default 1MB AQE coalesce
-      // floor serializes them onto a handful of cores (measured 3x on
-      // simhash_neardup_pairs_wide at sf0.1/local[32]). 64k keeps AQE's
-      // empty-partition cleanup while letting parallelism win.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // Always use the sort shuffle writer, never the bypass-merge one:
-      // bypass opens R partition files per MAP task, which for this
-      // surface's many small exchanges is measured as the top executor
-      // frame (FileOutputStream.open0 — thread-dump sampled on
-      // jaccard_prefix_pairs; warm 2.4 s -> 1.4 s with the sort writer).
-      // Production-faithful, not a local trick: at cluster scale R exceeds
-      // the 200-partition bypass threshold anyway, so the sort writer IS
-      // the 100 TB code path; this just stops the local bench from
-      // measuring a writer the deployment would never use.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val listener = new BenchMetricsListener
     spark.sparkContext.addSparkListener(listener)
     // Warm up the JVM/codegen/parquet paths once so the first timed query

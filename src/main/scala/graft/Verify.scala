@@ -1,27 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // CPU-bound analytic kernels (simhash/jaccard/minhash joins) are
-      // tiny in BYTES but heavy per row; the default 1MB AQE coalesce
-      // floor serializes them onto a handful of cores (measured 3x on
-      // simhash_neardup_pairs_wide at sf0.1/local[32]). 64k keeps AQE's
-      // empty-partition cleanup while letting parallelism win.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     // Key-parity gate (VERDICT r13 #6): every declared query must carry an
     // oracle and every oracle a query, so a future key addition cannot

@@ -1,8 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Benchmark decontamination at corpus scale.
@@ -27,25 +25,13 @@ import org.apache.spark.sql.functions._
   * The blob is collected to the driver and re-enters the plan as a literal —
   * the same sketch-sized driver round-trip a broadcast variable or Spark's
   * own `InjectRuntimeFilter` scalar subquery makes; it never scales with the
-  * corpus (default ~64 KiB at 2^16 items / 3% fpp).
+  * corpus (default ~64 KiB at 2^16 items / 3% fpp). The two internal bloom
+  * expressions are the session functions `graft_bloom_build` and
+  * `graft_bloom_might_contain` ([[graft.functions.GraftExtensions]]), so the
+  * blob travels as a binary literal Column through `call_function` instead
+  * of SQL text.
   */
 object Decontaminate {
-
-  /** Register the two internal bloom expressions as session SQL functions
-    * (same pattern as [[graft.functions.NativeExpressions.register]]): the
-    * analyzer wraps the `AggregateFunction` in an `AggregateExpression`
-    * during resolution, and `call_function` lets the bloom blob travel as a
-    * binary literal Column instead of SQL text.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_build",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_might_contain",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)), "scala_udf")
-  }
 
   /** Corpus documents sharing at least one word-`n`-gram with the benchmark
     * set, with the count of distinct contaminated grams per document —
@@ -57,8 +43,6 @@ object Decontaminate {
       benchmark: DataFrame,
       n: Int = 5,
       expectedItems: Long = 1L << 16): DataFrame = {
-    val spark = corpus.sparkSession
-    register(spark)
     // bloom inserts are idempotent, so the build side skips the distinct
     // shuffle entirely: one narrow scan → partial blooms → merged blob
     val bench = benchmark

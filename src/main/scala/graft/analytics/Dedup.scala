@@ -611,10 +611,7 @@ object Dedup {
     * one label-relation join for the relabel — the historical EDGE set is
     * never touched.
     */
-  def connectedComponentsIncremental(
-      oldLabels: DataFrame,
-      newEdges: DataFrame,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
+  def connectedComponentsIncremental(oldLabels: DataFrame, newEdges: DataFrame)
       : DataFrame = {
     val la = oldLabels.select(col("doc_id").as("id_a"), col("component").as("ca"))
     val lb = oldLabels.select(col("doc_id").as("id_b"), col("component").as("cb"))
@@ -1432,7 +1429,6 @@ object Dedup {
     // former conv(substring(md5Hex(s), 1|11, 10), 16, 10) pair, which paid
     // a MessageDigest.getInstance, a 32-char hex string and two base-16
     // string parses per shingle (see NativeExpressions.Md5H1H2)
-    graft.functions.NativeExpressions.register(docs.sparkSession)
     val withH = docs
       .repartition(col("doc_id"))
       .select(col("doc_id"), tokens(col("text")).as("w"))
@@ -1589,7 +1585,6 @@ object Dedup {
     // per character; the fused expression is ~5x faster at sf0.1 with
     // bit-identical output (same hash, same trailing window, same
     // distinct order).
-    graft.functions.NativeExpressions.register(docs.sparkSession)
     docs.repartition(col("doc_id"))
       .filter(length(col("text")) >= k)
       .select(col("doc_id"),
@@ -1789,7 +1784,6 @@ object Dedup {
       materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
     require(maxDist >= 0 && maxDist < 64,
       s"simhashNearDupPairsStrSig: maxDist must be in [0, 64), got $maxDist")
-    graft.functions.NativeExpressions.register(docs.sparkSession)
     val sigs = materialize(simhashSignatures(docs))
     val m = maxDist + 1 // pigeonhole: ≤ maxDist flips leave one chunk exact
     val bits = 64
@@ -1832,7 +1826,6 @@ object Dedup {
     // split-on-space tokens incl. empties, same md5-nibble bit
     // extraction, same strict-majority vote) — the DuckDB oracle is
     // unchanged.
-    graft.functions.NativeExpressions.register(docs.sparkSession)
     docs.repartition(col("doc_id"))
       .select(col("doc_id"), expr(s"simhash64(text, $bits)").as("simhash"))
   }

@@ -126,7 +126,6 @@ object EntityResolution {
       materialize: DataFrame => DataFrame =
         graft.engine.Materialize.none): DataFrame = {
     require(strategies.nonEmpty, "blockingEval: need strategies")
-    graft.functions.NativeExpressions.register(records.sparkSession)
     val base = records.select(col(idCol).as("rid"), col(nameCol).as("name"))
     // truth: dist <= 1 pairs with NO blocking (distinct deletion variants
     // are a complete candidate generator at threshold 1). Both hot frames

@@ -177,7 +177,6 @@ object Similarity {
     * rather than oracle-hashed.
     */
   def fastCosineTopK(embeddings: DataFrame, queryId: Long, k: Int): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val q = embeddings.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q_emb"))
     embeddings.filter(col("vec_id") =!= queryId)
@@ -224,7 +223,6 @@ object Similarity {
     // DuckDB oracle) are unchanged. `groupCols` trains independent
     // codebooks side by side (PQ subspaces): grouped rows only ever meet
     // same-group centroids, via the broadcast join on the group key.
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val collected = array_sort(collect_list(struct(col("cell_id"), col("c_emb"))))
     // Empty-codebook guard lives HERE, on the cells relation itself, so the
     // n==1 and n>1 consumers carry the exact same fragment above the
@@ -358,7 +356,6 @@ object Similarity {
       iters: Int = 3,
       trainMod: Int = 1,
       materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spread = embeddings.repartition(col("vec_id"))
     // 16 rows consumed by two assignment passes — cut the 3-iteration
     // window/agg lineage once (pass Materialize.parquet(dir) on a real
@@ -404,7 +401,6 @@ object Similarity {
       perCell: Int = 10,
       materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
       : DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spread = embeddings.repartition(col("vec_id"))
     val centroids =
       materialize(kMeansCentroids(spread, nCells, iters, trainMod))
@@ -448,7 +444,6 @@ object Similarity {
       shortK: Int = 50,
       trainMod: Int = 1,
       materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spread = embeddings.repartition(col("vec_id"))
     val q = embeddings.filter(col("vec_id") === queryId)
 
@@ -514,7 +509,6 @@ object Similarity {
       ksub: Int = 16,
       iters: Int = 2,
       trainMod: Int = 1): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spread = embeddings.repartition(col("vec_id"))
     val stacked = spread.select(col("vec_id"),
       posexplode(array((0 until m).map(s =>
@@ -573,7 +567,6 @@ object Similarity {
       shortK: Int = 50,
       trainMod: Int = 1,
       materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spread = embeddings.repartition(col("vec_id"))
     val q = embeddings.filter(col("vec_id") === queryId)
 
@@ -679,7 +672,6 @@ object Similarity {
       iters: Int = 2,
       trainMod: Int = 4,
       materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spread = embeddings.repartition(col("vec_id"))
     // nCells < 0 (default) turns the documented FAISS dial automatically:
     // 2^max(4, bitlength(n/4096)) — cells grow ∝ corpus so per-cell
@@ -746,7 +738,6 @@ object Similarity {
       pqTrainMod: Int = 4,
       shortK: Int = 50,
       materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spread = embeddings.repartition(col("vec_id"))
     val q = embeddings.filter(col("vec_id") === queryId)
     val residCol = expr(
@@ -842,7 +833,6 @@ object Similarity {
       iters: Int = 2,
       trainMod: Int = 4,
       materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spread = embeddings.repartition(col("vec_id"))
     // defaults < 0 adapt both dials to the corpus: queryMod = max(100,
     // n/500) caps the sampled query set at ~500, so the brute-force truth
@@ -925,7 +915,6 @@ object Similarity {
       trainMod: Int = 4,
       materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
     require(probes.nonEmpty, "annRecallCurveIvf: need at least one probe width")
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spread = embeddings.repartition(col("vec_id"))
     // same adaptive dials as annRecallIvf: ~500-query truth (linear) and
     // the deployed adaptive-nlist cell count; gate scales land on (100, 16)
@@ -998,7 +987,6 @@ object Similarity {
       iters: Int = 2,
       trainMod: Int = 4,
       materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
-    graft.functions.NativeExpressions.register(existing.sparkSession)
     val centroids = materialize(kMeansCentroids(
       existing.repartition(col("vec_id")), nCells, iters, trainMod))
     assignCells(batch.repartition(col("vec_id")), centroids, 1)
@@ -1055,7 +1043,6 @@ object Similarity {
       subDim: Int = 16,
       trainMod: Int = 1,
       materialize: DataFrame => DataFrame = graft.engine.Materialize.local): Unit = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spark = embeddings.sparkSession
     // Build into a sibling temp dir, then swap it in with directory
     // renames: a concurrent reader in another process sees either the old
@@ -1254,7 +1241,6 @@ object Similarity {
       m: Int = 4,
       subDim: Int = 16,
       shortK: Int = 50): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spark = embeddings.sparkSession
 
     // The index HEAD — coarse centroids + m×nCells codebook rows, a few
@@ -1383,7 +1369,6 @@ object Similarity {
       indexDir: String,
       k: Int,
       nProbe: Int = 2): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spark = embeddings.sparkSession
     // coarse centroids come from the cached index head (a few KiB) — no
     // per-job codebooks read; the DataFrame is rebuilt locally so the
@@ -1437,7 +1422,6 @@ object Similarity {
     * stateless).
     */
   def streamingIvfAssign(vectors: DataFrame, indexDir: String): DataFrame = {
-    graft.functions.NativeExpressions.register(vectors.sparkSession)
     val coarse = vectors.sparkSession
       .read.parquet(s"$indexDir/codebooks.parquet")
       .filter(col("sub") === -1).drop("sub")
@@ -1782,7 +1766,6 @@ object Similarity {
     * Lloyd-sample assignments inside the quantizer build.
     */
   private[graft] def semDedupAssignProbe(embeddings: DataFrame): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spread = embeddings.repartition(col("vec_id"))
     val n = countInput(embeddings)
     val bl = 64 - java.lang.Long.numberOfLeadingZeros(math.max(n / 4096, 1L))
@@ -1800,7 +1783,6 @@ object Similarity {
       trainMod: Int = 4,
       minSim: Double = 0.30,
       materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spread = embeddings.repartition(col("vec_id"))
     // nCells < 0 (default) = the adaptive FAISS-nlist rule shared with
     // knnJoinIvf / the index build: 2^max(4, bitlength(n/4096)) — the
@@ -1941,7 +1923,6 @@ object Similarity {
       iters: Int,
       trainMod: Int,
       materialize: DataFrame => DataFrame): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val spread = embeddings.repartition(col("vec_id"))
     val cells =
       if (topCells > 0) topCells
@@ -1995,7 +1976,6 @@ object Similarity {
       indexDir: String,
       minSim: Double = 0.30,
       materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     // the cell-partitioned inverted lists land as one small file per cell
     // directory; coalesce the scan to ~one task per cell so this key does
     // not schedule a hundred-odd tiny tasks for a KiB-per-cell read (no
@@ -2065,7 +2045,6 @@ object Similarity {
     // values on this corpus are hash-checked tri-scale every round. If a
     // boundary hit ever lands, the structural fix is the bitextMarginPairs
     // pattern: compare in fixed point with a 1-ulp-tolerant band (sim_fp).
-    graft.functions.NativeExpressions.register(embeddings.sparkSession)
     val bucketed = withSignBucket(embeddings, bits)
       .withColumn("nrm", sqrt(expr("float_dot(embedding, embedding)")))
     val a = bucketed.select(col("bucket"), col("vec_id").as("id_a"),
@@ -2102,7 +2081,6 @@ object Similarity {
     */
   def topComponentPower(embeddings: DataFrame, rounds: Int = 8): DataFrame = {
     val spark = embeddings.sparkSession
-    graft.functions.NativeExpressions.register(spark)
     // the Gram is symmetric: emit only the upper triangle, and emit it
     // with the `tri_products` codegen generator — one compiled loop per
     // vector yields the d(d+1)/2 (i, j, xf_i·xf_j) rows that the former

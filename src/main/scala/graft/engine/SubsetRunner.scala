@@ -31,16 +31,7 @@ object SubsetRunner {
     require(args.length == 3,
       "usage: SubsetRunner <config.json | - | --stdin> <sourceDir> <outDir>")
     val Array(configPath, sourceDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-subset")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     try {
       val config = SubsetConfig.fromJson(readConfigSource(configPath))
       val result = run(spark, config, sourceDir)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -101,11 +100,4 @@ object NativeAggregates {
         newChildren: IndexedSeq[Expression]): Expression =
       copy(child = newChildren(0), maxIdExpr = newChildren(1))
   }
-
-  /** Register `bitmap_distinct` in the session function registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_distinct",
-      exprs => BitmapDistinctCount(exprs(0), exprs(1)).toAggregateExpression(),
-      "scala_udf")
 }

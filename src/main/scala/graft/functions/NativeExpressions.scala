@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions (with `doGenCode`) for the vector/signature
@@ -878,26 +877,43 @@ object NativeExpressions {
       copy(child = newChild)
   }
 
+  /** C(m, 2), the pair count of `m` distinct ids, as an output array size.
+    * Computed in Long: as an Int it wraps negative from m = 65,537 on. A
+    * count past the JVM array limit fails with a clear error instead.
+    */
+  def pairCount(m: Int): Int = {
+    val pairs = Math.multiplyExact(m.toLong, m - 1L) / 2
+    if (pairs > ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH)
+      throw new IllegalArgumentException(
+        s"sorted_pairs: a group of $m distinct ids has $pairs pairs, more than " +
+          s"the ${ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH}-element array limit; " +
+          "cap the group size before pairing")
+    pairs.toInt
+  }
+
   /** All unordered pairs of one co-occurrence group in a single compiled
-    * pass — the per-group core of [[SortedPairs]]. Sorts a copy ascending
-    * and emits `(a[i], a[j])` for `i < j` over the DISTINCT values
+    * pass — the per-group core of [[SortedPairs]]. Sorts the non-null ids
+    * ascending and emits `(a[i], a[j])` for `i < j` over the DISTINCT values
     * (equal neighbors are skipped), so the result is exactly the pair set
-    * a self-join `a.id < b.id` produces on a duplicate-free group, in
-    * deterministic (ascending, ascending) order.
+    * a self-join `a.id < b.id` produces on a duplicate-free group (which
+    * drops null ids), in deterministic (ascending, ascending) order.
     */
   def sortedPairsJava(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
-    if (n < 2)
+    val a = new Array[Long](n)
+    var c = 0
+    var i = 0
+    while (i < n) { if (!arr.isNullAt(i)) { a(c) = arr.getLong(i); c += 1 }; i += 1 }
+    if (c < 2)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(
         Array.empty[Any])
-    val a = arr.toLongArray()
-    java.util.Arrays.sort(a)
+    java.util.Arrays.sort(a, 0, c)
     // distinct count after sort (callers' inputs are distinct already —
     // this is the defensive equivalent of the join's strict a < b)
     var m = 1
-    var i = 1
-    while (i < n) { if (a(i) != a(i - 1)) { a(m) = a(i); m += 1 }; i += 1 }
-    val out = new Array[Any](m * (m - 1) / 2)
+    i = 1
+    while (i < c) { if (a(i) != a(i - 1)) { a(m) = a(i); m += 1 }; i += 1 }
+    val out = new Array[Any](pairCount(m))
     var k = 0
     i = 0
     while (i < m) {
@@ -921,7 +937,8 @@ object NativeExpressions {
     * the join's sort + merge + row-build machinery per pair: one compiled
     * loop per GROUP emits the C(df, 2) pair structs directly, and the
     * downstream pair aggregate consumes them inside the same stage.
-    * NULL or short input yields an EMPTY array (the join emits no rows).
+    * NULL or short input yields an EMPTY array (the join emits no rows);
+    * null slots are skipped.
     */
   case class SortedPairs(child: Expression)
       extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -1183,70 +1200,5 @@ object NativeExpressions {
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
-  }
-
-  /** Register `float_dot`, `hamming`, `first_chunk_within`,
-    * `winnow_minima` and `simhash64` as SQL functions in the session, so
-    * they are usable from `expr(...)`/`spark.sql(...)`.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "float_dot", exprs => FloatVectorDot(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "l2_sq", exprs => FloatDoubleL2Sq(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "l2_argmin_idx", exprs => L2ArgminIdx(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "hamming", exprs => HammingDistance(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "first_chunk_within",
-      exprs => FirstChunkWithin(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "winnow_minima",
-      exprs => WinnowMinima(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "hilbert_pos",
-      exprs => HilbertPos(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "md5_h1h2", exprs => Md5H1H2(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "sorted_pairs", exprs => SortedPairs(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "deletion_variants", exprs => DeletionVariants(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "edit_within_1", exprs => EditWithin1(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "tri_products", exprs => TriProducts(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "simhash64",
-      exprs => Simhash64(exprs(0),
-        if (exprs.length > 1) exprs(1)
-        else org.apache.spark.sql.catalyst.expressions.Literal(64)),
-      "scala_udf")
-  }
-}
-
-/** `SparkSessionExtensions` installer: build the session with
-  * `.withExtensions(new GraftExtensions)` (or config
-  * `spark.sql.extensions=graft.functions.GraftExtensions`) to get the native
-  * functions in every new session.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("float_dot"),
-      new ExpressionInfo(classOf[NativeExpressions.FloatVectorDot].getName, "float_dot"),
-      (exprs: Seq[Expression]) => NativeExpressions.FloatVectorDot(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("hamming"),
-      new ExpressionInfo(classOf[NativeExpressions.HammingDistance].getName, "hamming"),
-      (exprs: Seq[Expression]) => NativeExpressions.HammingDistance(exprs(0), exprs(1))))
-    // whole-operator tier: grouped top-k strategy + the optimizer rule that
-    // rewrites row_number-window-filter into it
-    e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-    e.injectOptimizerRule(_ => graft.plans.RowNumberTopKRewrite)
   }
 }

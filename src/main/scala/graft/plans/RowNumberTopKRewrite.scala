@@ -21,8 +21,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Tie behavior at rank k is implementation-defined in BOTH forms unless the
   * order is total — the rewrite preserves that contract, not any particular
-  * tie choice. Install via `spark.experimental.extraOptimizations` (plus the
-  * strategy in `extraStrategies`) or `GraftExtensions`.
+  * tie choice. Installed per session by [[TopKPerKey.install]] (into
+  * `spark.experimental.extraOptimizations`, with the strategy in
+  * `extraStrategies`).
   */
 object RowNumberTopKRewrite extends Rule[LogicalPlan] {
 

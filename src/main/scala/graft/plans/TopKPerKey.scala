@@ -257,9 +257,10 @@ object TopKPerKey {
     }
   }
 
-  /** Register the strategy (and the row_number rewrite rule) in a session
-    * built without `GraftExtensions` — `experimental` is the public escape
-    * hatch for both.
+  /** Register the strategy (and the row_number rewrite rule) in a session —
+    * the only way either is installed; `experimental` is the public escape
+    * hatch for both. `GraftExtensions` injects functions only, because
+    * injecting these into every session would change its plans.
     *
     * SESSION-WIDE side effect: once installed, every `row_number() ≤ k`
     * idiom in the session plans through [[TopKPerKeyExec]] (identical

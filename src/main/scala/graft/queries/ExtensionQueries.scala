@@ -738,7 +738,6 @@ object ExtensionQueries {
     // cosine-metric index (unit vectors make dot = cosine). Map-only: one
     // codegen'd float_dot per row, no shuffle; long-format output
     "embedding_l2_normalize" -> ((s, dir) => {
-      graft.functions.NativeExpressions.register(s)
       t(s, dir, "embeddings").repartition(col("vec_id"))
         .withColumn("nrm", sqrt(expr("float_dot(embedding, embedding)")))
         .select(col("vec_id"), col("nrm"),
@@ -1499,7 +1498,6 @@ object ExtensionQueries {
     // exact distinct via the custom TypedImperativeAggregate bitmap: one
     // pass, fixed-size OR-mergeable buffers — no distinct-value shuffle
     "exact_distinct_bitmap" -> ((s, dir) => {
-      graft.functions.NativeAggregates.register(s)
       t(s, dir, "lineitem").agg(
         expr("bitmap_distinct(l_partkey, CAST(2097151 AS BIGINT))").as("n_parts"),
         count(lit(1)).as("n_rows"))
@@ -1650,7 +1648,6 @@ object ExtensionQueries {
     // at a fraction of its row-build cost), counts shuffle on the pair,
     // the part-frequency side broadcasts.
     "basket_pairs_topk" -> ((s, dir) => {
-      graft.functions.NativeExpressions.register(s)
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()

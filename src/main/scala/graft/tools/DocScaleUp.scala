@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Documents-only fixture scale-up (dev tool): the text-side companion to
@@ -25,14 +24,7 @@ object DocScaleUp {
     val src = args(0)
     val out = args(1)
     val mult = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val base = docs.agg(max(col("doc_id")).cast("long")).head.getLong(0) + 1
     val t0 = System.nanoTime()

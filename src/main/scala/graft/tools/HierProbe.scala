@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Production-dial SemDeDup scale probe (dev tool): times
   * [[graft.analytics.Similarity.semDedupKeep]] (flat, adaptive capped
@@ -43,15 +42,7 @@ object HierProbe {
     val mode = if (args.length > 1) args(1) else "hier"
     val minSim = if (args.length > 2) args(2).toDouble else 0.90
     val stage = if (args.length > 3) args(3) else "full"
-    val spark = ConfHook(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     val l = new L
     spark.sparkContext.addSparkListener(l)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")

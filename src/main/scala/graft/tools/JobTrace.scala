@@ -2,14 +2,13 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-job wall/stage/task breakdown for one query key (dev tool):
   * `SPARK_GRAFT_SF_DIR=… runMain graft.tools.JobTrace key [key…]` — runs
   * each key twice (rep 2 is the warm reading) and prints one line per
   * Spark job with its wall span, stage count, task count and the root RDD
   * call site, so a multi-job operator (k-means + CC fixpoints + audits)
-  * shows WHERE its wall clock goes. Reuses the Solo session config.
+  * shows WHERE its wall clock goes.
   */
 object JobTrace {
   private final class L extends SparkListener {
@@ -48,17 +47,7 @@ object JobTrace {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = ConfHook(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     val l = new L
     spark.sparkContext.addSparkListener(l)
     spark.read.parquet(s"$dir/region.parquet").groupBy("r_name").count().count()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Whole-surface physical-plan audit (dev tool): build every declared query
   * and scan its executed plan for the shapes that do not survive scale —
@@ -18,21 +17,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // CPU-bound analytic kernels (simhash/jaccard/minhash joins) are
-      // tiny in BYTES but heavy per row; the default 1MB AQE coalesce
-      // floor serializes them onto a handful of cores (measured 3x on
-      // simhash_neardup_pairs_wide at sf0.1/local[32]). 64k keeps AQE's
-      // empty-partition cleanup while letting parallelism win.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     var cartesian = List.empty[String]
     var bnlj = 0
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted

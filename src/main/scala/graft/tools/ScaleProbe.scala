@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.analytics.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Adversarial-scale probe (dev tool): replicate the documents corpus
@@ -18,14 +18,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mult = if (args.nonEmpty) args(0).toInt else 4
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val n = docs.count()
     val dup = (0 until mult).map(i =>

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Scale-probe sweep (dev tool): time a set of headline query keys against
   * one sf directory with per-key task metrics, two reps each (rep 1 cold /
@@ -49,23 +48,7 @@ object SfSweep {
         graft.SparkEntry.queries.keys.toSeq.sorted
       else if (args.length > 1) args.drop(1).toSeq
       else defaultKeys.filter(graft.SparkEntry.queries.contains)
-    val spark = ConfHook(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // CPU-bound analytic kernels (simhash/jaccard/minhash joins) are
-      // tiny in BYTES but heavy per row; the default 1MB AQE coalesce
-      // floor serializes them onto a handful of cores (measured 3x on
-      // simhash_neardup_pairs_wide at sf0.1/local[32]). 64k keeps AQE's
-      // empty-partition cleanup while letting parallelism win. A/B hook:
-      // SPARK_GRAFT_CONF can override any of these per run.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     val l = new L
     spark.sparkContext.addSparkListener(l)
 

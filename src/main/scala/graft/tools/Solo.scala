@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Time individual query keys in isolation (dev tool):
   * SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 runMain graft.tools.Solo key [key…]
@@ -12,24 +11,7 @@ object Solo {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // CPU-bound analytic kernels (simhash/jaccard/minhash joins) are
-      // tiny in BYTES but heavy per row; the default 1MB AQE coalesce
-      // floor serializes them onto a handful of cores (measured 3x on
-      // simhash_neardup_pairs_wide at sf0.1/local[32]). 64k keeps AQE's
-      // empty-partition cleanup while letting parallelism win.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.ui.enabled", "false")
-    // A/B experiment hook: SPARK_GRAFT_CONF="key=value;key=value"
-    ConfHook(builder)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     // task CPU is the host-noise-robust reading (wall swings 2x with
     // hypervisor steal; CPU doesn't) — accumulate it per rep
     val cpu = new java.util.concurrent.atomic.AtomicLong(0L)

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dump SELECTED query keys + their oracle SQL in the same layout as
   * [[graft.Verify]] (dev tool, for `scripts/check_oracles.py` on a subset):
@@ -11,21 +10,7 @@ import org.apache.spark.sql.SparkSession
 object SoloVerify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val keys = args.drop(2)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      // CPU-bound analytic kernels (simhash/jaccard/minhash joins) are
-      // tiny in BYTES but heavy per row; the default 1MB AQE coalesce
-      // floor serializes them onto a handful of cores (measured 3x on
-      // simhash_neardup_pairs_wide at sf0.1/local[32]). 64k keeps AQE's
-      // empty-partition cleanup while letting parallelism win.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     new java.io.File(outDir).mkdirs()
     keys.foreach { name =>
       SparkEntry.queries(name)(spark, sfDir).coalesce(1)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Embeddings-only fixture scale-up (dev tool): the vector-decade companion
@@ -43,14 +43,7 @@ object VecScaleUp {
     val out = args(1)
     val mult = if (args.length > 2) args(2).toInt else 10
     val dupPct = if (args.length > 3) args(3).toDouble else 100.0
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val emb = spark.read.parquet(s"$src/embeddings.parquet")
     val base = emb.agg(max(col("vec_id")).cast("long")).head.getLong(0) + 1
     // corpus RMS coordinate — sizes the heavy noise relative to the data

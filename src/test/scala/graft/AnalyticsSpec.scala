@@ -979,7 +979,6 @@ class AnalyticsSpec extends SparkSpecBase {
   }
 
   test("tri_products gram equals the posexplode self-join gram") {
-    graft.functions.NativeExpressions.register(spark)
     // the kernel path (what topComponentPower now runs)
     val coords = emb.repartition(col("vec_id"))
       .select(expr("transform(embedding, x -> " +

@@ -104,7 +104,6 @@ class EntityResolutionSpec extends SparkSpecBase {
   }
 
   test("deletion-variant join + edit_within_1 equals the levenshtein truth") {
-    graft.functions.NativeExpressions.register(spark)
     // fixture names PLUS adversarial shapes: equal strings, pure
     // insert/delete pairs, substitution pairs, transposition (dist 2 —
     // must NOT match), repeated chars (del_i = del_j collisions),
@@ -133,7 +132,6 @@ class EntityResolutionSpec extends SparkSpecBase {
   }
 
   test("deletion_variants kernel matches the SQL lambda; edit_within_1 matches bounded levenshtein") {
-    graft.functions.NativeExpressions.register(spark)
     val names = Seq("abc", "abcd", "aab", "aa", "a", "", "héllo", "xx yy",
       "Customer#000000042", "aaaa", "héé", "ab")
     val df = names.toDF("name")

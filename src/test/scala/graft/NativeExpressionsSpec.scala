@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 class NativeExpressionsSpec extends SparkSpecBase {
 
   test("float_dot matches the decimal HOF formulation to 1e-9") {
-    NativeExpressions.register(spark)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(50)
     val both = emb.select(
       expr("float_dot(embedding, embedding)").as("fast"),
@@ -16,7 +15,6 @@ class NativeExpressionsSpec extends SparkSpecBase {
   }
 
   test("l2_sq matches the HOF zip_with/aggregate fold bit-for-bit") {
-    NativeExpressions.register(spark)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(50)
       .withColumn("c", expr("transform(embedding, x -> CAST(x AS DOUBLE) + 0.125)"))
     val both = emb.select(
@@ -30,7 +28,6 @@ class NativeExpressionsSpec extends SparkSpecBase {
   }
 
   test("md5_h1h2 matches the conv(substring(md5)) pair bit-for-bit") {
-    NativeExpressions.register(spark)
     import spark.implicits._
     // real shingle-like strings plus edge cases: empty string, multi-byte
     // UTF-8, long text — h1/h2 must equal the former hex-parse formulation
@@ -78,7 +75,6 @@ class NativeExpressionsSpec extends SparkSpecBase {
   }
 
   test("l2_argmin_idx matches the interpreted aggregate fold bit-for-bit") {
-    NativeExpressions.register(spark)
     // real embeddings as the queries; a synthetic sorted codebook built
     // from the first 16 vectors (the kMeansCentroids seed rule), with a
     // deliberate duplicated centroid so the tie-break path is exercised
@@ -120,7 +116,6 @@ class NativeExpressionsSpec extends SparkSpecBase {
   }
 
   test("bitmap_distinct aggregate equals count(DISTINCT) and raises out of range") {
-    graft.functions.NativeAggregates.register(spark)
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val r = li.agg(
       expr("bitmap_distinct(l_partkey, CAST(2097151 AS BIGINT))").as("bm"),
@@ -138,7 +133,6 @@ class NativeExpressionsSpec extends SparkSpecBase {
   }
 
   test("hamming counts differing positions") {
-    NativeExpressions.register(spark)
     import spark.implicits._
     val rows = Seq(("1100", "1010"), ("abc", "abc"), ("", "xx"))
       .toDF("a", "b")
@@ -147,7 +141,6 @@ class NativeExpressionsSpec extends SparkSpecBase {
   }
 
   test("sorted_pairs reproduces the self-join pair relation exactly") {
-    NativeExpressions.register(spark)
     import spark.implicits._
     // real co-occurrence groups off the fixture corpus (distinct per
     // (doc_id, s), exactly the callers' precondition) + adversarial edges
@@ -178,10 +171,25 @@ class NativeExpressionsSpec extends SparkSpecBase {
     assert(edges == Seq((3L, 3L, 5L), (3L, 3L, 9L), (3L, 5L, 9L), (4L, 2L, 8L)))
     assert(Seq(Tuple1(null: Seq[java.lang.Long])).toDF("ids")
       .selectExpr("size(sorted_pairs(ids))").head.getInt(0) == 0)
+    // null slots are skipped, as the self-join drops null ids
+    assert(spark.sql("SELECT inline(sorted_pairs(array(3L, NULL, 1L)))")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 3L)))
+    assert(spark.sql("SELECT size(sorted_pairs(array(NULL, 5L, NULL)))")
+      .head.getInt(0) == 0)
+  }
+
+  test("sorted_pairs sizes its output in Long and rejects a group past the array limit") {
+    assert(NativeExpressions.pairCount(0) == 0 && NativeExpressions.pairCount(1) == 0)
+    // the largest group whose C(m, 2) still fits an array
+    assert(NativeExpressions.pairCount(65536) == 65536L * 65535 / 2)
+    // m = 65,537 wrapped the former Int product negative; the size check
+    // must fail before anything is allocated
+    val e = intercept[IllegalArgumentException](NativeExpressions.pairCount(65537))
+    assert(e.getMessage.contains("65537 distinct ids") &&
+      e.getMessage.contains("2147516416 pairs"))
   }
 
   test("type checking rejects wrong argument types") {
-    NativeExpressions.register(spark)
     import spark.implicits._
     val e = intercept[Exception] {
       Seq((1, 2)).toDF("a", "b").select(expr("float_dot(a, b)")).collect()
@@ -189,11 +197,11 @@ class NativeExpressionsSpec extends SparkSpecBase {
     assert(e.getMessage.toLowerCase.contains("float"))
   }
 
-  test("GraftExtensions registers both functions into an extensions object") {
+  test("GraftExtensions injects all 16 graft functions") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext) // must not throw
+    assert(GraftExtensions.functions.map(_._1).distinct.size == 16)
     val s2 = spark.newSession()
-    NativeExpressions.register(s2)
     assert(s2.sql("SELECT hamming('10', '11') AS h").head.getInt(0) == 1)
   }
 }

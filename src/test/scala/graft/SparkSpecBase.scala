@@ -4,17 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession across all suites (object-level lazy val —
-  * ScalaTest instantiates suites in one JVM under sbt fork).
+  * ScalaTest instantiates suites in one JVM under sbt fork), built by the
+  * same [[graft.Session]] factory the CLI and the bench use.
   */
 object SparkSpecBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session()
 }
 
 abstract class SparkSpecBase extends AnyFunSuite {
