@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Compare two SfSweep logs (A/B of a Spark conf): per-key warm-rep ratio.
+"""Compare two `graft.tools.Trace` logs (A/B of a Spark conf): per-key warm-rep ratio.
 
 Usage: python3 scripts/ab_sweep_compare.py <log_a> <log_b> [label_a label_b]
 

@@ -1,39 +1,7 @@
 package graft
 import java.lang.management.ManagementFactory
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
-
-/** Accumulates task-level execution metrics across every job the session
-  * runs, so the bench can attribute GC / spill / cpu-vs-wall gaps to the
-  * specific key that ran between two snapshots. In local mode the
-  * "executor" is the bench JVM itself, so `taskGcMs` is the task-attributed
-  * slice of the same collector the JVM-level MXBean reading sees.
-  */
-private final class BenchMetricsListener extends SparkListener {
-  val runMs, cpuNs, taskGcMs, spillMemB, spillDiskB, shuffleWriteB, tasks =
-    new AtomicLong
-  val peakExecMem = new AtomicLong // max, not sum
-  override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-    val m = te.taskMetrics
-    if (m != null) {
-      runMs.addAndGet(m.executorRunTime)
-      cpuNs.addAndGet(m.executorCpuTime)
-      taskGcMs.addAndGet(m.jvmGCTime)
-      spillMemB.addAndGet(m.memoryBytesSpilled)
-      spillDiskB.addAndGet(m.diskBytesSpilled)
-      shuffleWriteB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      tasks.incrementAndGet()
-      peakExecMem.getAndAccumulate(m.peakExecutionMemory, math.max)
-    }
-  }
-  def snap(): Map[String, Long] = Map(
-    "runMs" -> runMs.get, "cpuNs" -> cpuNs.get, "taskGcMs" -> taskGcMs.get,
-    "spillMemB" -> spillMemB.get, "spillDiskB" -> spillDiskB.get,
-    "shuffleWriteB" -> shuffleWriteB.get, "tasks" -> tasks.get,
-    "peakExecMem" -> peakExecMem.get)
-}
 
 object Bench {
 
@@ -161,7 +129,7 @@ object Bench {
     * collection unloads Spark's generated (whole-stage-codegen) classes,
     * so every later key recompiles and re-JITs its kernels — warm reps ran
     * 1.5-2x their isolated time across the whole surface (r14, 325 keys:
-    * session warm 299 s vs 196 s with per-key Solo times unchanged). Gate:
+    * session warm 299 s vs 196 s with isolated per-key times unchanged). Gate:
     * collect only when the heap is actually loaded.
     */
   def maybeGc(fractionOfMax: Double = 0.6): Unit = {
@@ -208,8 +176,7 @@ object Bench {
     // snapshot the previous round's per-key detail BEFORE overwriting it
     val prevDetail = readPrevDetail("BENCH_DETAIL.json")
     val spark = Session()
-    val listener = new BenchMetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val metrics = TaskMetrics(spark)
     // Warm up the JVM/codegen/parquet paths once so the first timed query
     // doesn't absorb session startup; measures queries, not JIT. The tiny
     // region/nation tables exercise each physical-operator family the
@@ -322,24 +289,12 @@ object Bench {
           Seq.empty
       }
     val setupSec = (System.nanoTime() - setupT0) / 1e9
-    // Run-order experiment hook (the 13-15s driver readings for
-    // minhash_verified_pairs only ever appear mid-sweep): "reverse" runs
-    // the map in reverse registration order; a comma list runs those keys
-    // FIRST, then the rest in registration order. Default = registration
-    // order (what every prior BENCH_r0N measured).
-    val baseOrder = SparkEntry.queries.keys.toSeq
-    val order = sys.env.get("SPARK_GRAFT_BENCH_ORDER") match {
-      case Some("reverse") => baseOrder.reverse
-      case Some(csv) if csv.nonEmpty =>
-        val first = csv.split(",").map(_.trim).filter(baseOrder.contains).toSeq
-        first ++ baseOrder.filterNot(first.contains)
-      case _ => baseOrder
-    }
+    val order = SparkEntry.queries.keys.toSeq
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val detail = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Long]]
     val results = order.map { name =>
       val fn = SparkEntry.queries(name)
-      val before = listener.snap(); val jvmBefore = jvmSnap()
+      val before = metrics.snap(); val jvmBefore = jvmSnap()
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
         // a failing query must be VISIBLE, not a fast-looking elapsed time:
@@ -348,17 +303,17 @@ object Bench {
           errors += name -> s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}"
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      val after = listener.snap(); val jvmAfter = jvmSnap()
+      val d = metrics.snap() - before; val jvmAfter = jvmSnap()
       detail += name -> (Map(
         "ms" -> (sec * 1000).toLong,
-        "taskRunMs" -> (after("runMs") - before("runMs")),
-        "taskCpuMs" -> (after("cpuNs") - before("cpuNs")) / 1000000,
-        "taskGcMs" -> (after("taskGcMs") - before("taskGcMs")),
+        "taskRunMs" -> d.runMs,
+        "taskCpuMs" -> d.cpuNs / 1000000,
+        "taskGcMs" -> d.gcMs,
         "jvmGcMs" -> (jvmAfter("jvmGcMs") - jvmBefore("jvmGcMs")),
-        "spillMemMB" -> (after("spillMemB") - before("spillMemB")) / (1024 * 1024),
-        "spillDiskMB" -> (after("spillDiskB") - before("spillDiskB")) / (1024 * 1024),
-        "shufWriteMB" -> (after("shuffleWriteB") - before("shuffleWriteB")) / (1024 * 1024),
-        "tasks" -> (after("tasks") - before("tasks"))) ++
+        "spillMemMB" -> d.spillMemB / (1024 * 1024),
+        "spillDiskMB" -> d.spillDiskB / (1024 * 1024),
+        "shufWriteMB" -> d.shuffleWriteB / (1024 * 1024),
+        "tasks" -> d.tasks) ++
         jvmAfter.view.filterKeys(k => k != "jvmGcMs").toMap)
       // untimed, between keys; pressure-gated — see maybeGc
       maybeGc()
@@ -371,7 +326,6 @@ object Bench {
     // series keeps its methodology; rep 2 is a WARM re-run (page cache,
     // JIT, and any deliberate operator-level caches are hot), so
     // rep1 >> rep2 reads as noise/JIT and rep1 ~= rep2 as honest compute.
-    // Override SPARK_GRAFT_BENCH_REP_SEC to rep only keys above a floor.
     // Stall immunity (VERDICT r16 #1): a single rep-2 wall reading can't
     // distinguish a code regression from a transient driver/host stall —
     // r16's warmRegr carried 13 phantoms with flat CPU and wall up to 14x
@@ -382,8 +336,6 @@ object Bench {
     // warm reps and record the median. Honest regressions survive the
     // median; stalls (which land on different keys each run) don't. Cost
     // stays ~1 warm rep for the whole sweep since <5% of keys trip it.
-    val repThreshold =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_REP_SEC", "0.0").toDouble
     // mid-run contention evidence (VERDICT r17 #5): a second canary read
     // plus a loadavg snapshot BEFORE the rep-2 sweep — the r17 driver run's
     // contention hit the cold sweep and was gone by warm time, a shape only
@@ -397,14 +349,14 @@ object Bench {
     val canary2Ms: Long =
       try canaryRep(spark) catch { case _: Throwable => -1L }
     order.foreach { name =>
-      if (!errors.contains(name) && results(name) >= repThreshold) {
+      if (!errors.contains(name)) {
         def warmRep(): (Long, Long) = {
-          val before = listener.snap()
+          val before = metrics.snap()
           val t0 = System.nanoTime()
           try SparkEntry.queries(name)(spark, sfDir).count()
           catch { case _: Throwable => () }
           val wallMs = (System.nanoTime() - t0) / 1000000
-          val runMs = listener.snap()("runMs") - before("runMs")
+          val runMs = (metrics.snap() - before).runMs
           maybeGc() // untimed; see the rep-1 loop
           (wallMs, runMs)
         }

@@ -1411,24 +1411,6 @@ object Similarity {
       lists, Seq("cell_id"), Seq("vec_id"), perCell)
   }
 
-  /** STREAMING ingest into the materialized IVF index — the continuous
-    * form of [[ivfIndexAppend]]: new vectors arrive on an unbounded
-    * source and are map-only assigned to the index's frozen coarse
-    * centroids (read once from the index head, broadcast). No state, no
-    * shuffle on the stream side — each micro-batch emits its
-    * (vec_id, cell_id) entries, which a sink appends to the
-    * cell-partitioned index (and the PQ-code path composes identically).
-    * Works on a batch DataFrame too (same code path — the assignment is
-    * stateless).
-    */
-  def streamingIvfAssign(vectors: DataFrame, indexDir: String): DataFrame = {
-    val coarse = vectors.sparkSession
-      .read.parquet(s"$indexDir/codebooks.parquet")
-      .filter(col("sub") === -1).drop("sub")
-    assignCells(vectors, coarse, 1)
-      .select(col("vec_id"), col("cell_id"))
-  }
-
   /** Scalar (int8) quantization of the embedding table — the SQ8 index
     * compression (FAISS `ScalarQuantizer`): per DIMENSION, the corpus
     * min/max define a linear [0, 255] grid and every value becomes its
@@ -1753,29 +1735,6 @@ object Similarity {
     * on one JVM while remaining one-shuffle linear-per-executor-core on a
     * cluster.
     */
-  /** Quantizer build + full-corpus nearest-cell assignment at
-    * [[semDedupKeep]]'s production dials (adaptive nlist, iters=2,
-    * trainMod=4) and nothing else — the stage the codegen argmin kernel
-    * owns, probe-able in isolation (`HierProbe <dir> assign`) so its cost
-    * can be tracked per round without paying the pair-scoring tail.
-    * Returns per-cell population counts (≤ nCells rows), NOT per-vector
-    * assignments: grouping on `cell_id` forces the argmin to evaluate for
-    * every corpus row — a bare `.count()` over the assignment projection
-    * lets column pruning delete the argmin expression entirely (the join
-    * row count needs no columns), and the probe would time only the
-    * Lloyd-sample assignments inside the quantizer build.
-    */
-  private[graft] def semDedupAssignProbe(embeddings: DataFrame): DataFrame = {
-    val spread = embeddings.repartition(col("vec_id"))
-    val n = countInput(embeddings)
-    val bl = 64 - java.lang.Long.numberOfLeadingZeros(math.max(n / 4096, 1L))
-    val cells = 1 << math.min(12, math.max(4, bl))
-    val centroids = graft.engine.Materialize.local(
-      kMeansCentroids(spread, cells, 2, 4))
-    assignCells(spread, centroids, 1)
-      .groupBy("cell_id").agg(count(lit(1)).as("pop"))
-  }
-
   def semDedupKeep(
       embeddings: DataFrame,
       nCells: Int = -1,

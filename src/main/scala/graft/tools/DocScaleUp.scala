@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * Same natural-growth contract as [[ScaleUp]]'s documents rule: replica
   * i > 0 suffixes every token with `_s{i}` (disjoint vocabularies — no
   * cross-replica near-duplicates, so candidate volume and dedup output
-  * grow ~linearly like a real bigger crawl; the adversarial
-  * duplicate-heavy regime stays [[ScaleProbe]]'s job) and doc_id shifts by
+  * grow ~linearly like a real bigger crawl) and doc_id shifts by
   * i·base, always widened to LONG (same wrap hazard as VecScaleUp's
   * vec_id). n_chars is re-derived from the suffixed text.
   *

@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * Natural (not adversarial) scaling for the text/vector corpora:
   * replica i > 0 suffixes every document token with `_r{i}` (disjoint
   * vocabularies — no cross-replica near-duplicates, so dedup output
-  * grows ~linearly like a real bigger crawl; the adversarial
-  * duplicate-heavy regime is [[ScaleProbe]]'s job) and perturbs each
+  * grows ~linearly like a real bigger crawl) and perturbs each
   * embedding coordinate by a small deterministic hash offset (so ANN
   * neighborhoods are not mult-way exact ties).
   *

@@ -34,8 +34,9 @@ object PlanBuilder {
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 }
 
-/** `private[spark]` members custom physical operators legitimately need at
-  * task runtime, re-exposed from inside the `org.apache.spark` namespace.
+/** `private[spark]` members re-exposed from inside the `org.apache.spark`
+  * namespace: what custom physical operators need at task runtime, and the
+  * listener-bus drain a metrics reader needs on the driver.
   */
 object SparkInternals {
   /** The memory-manager page size an external sorter should allocate with
@@ -43,4 +44,11 @@ object SparkInternals {
     * on the executor inside a task.
     */
   def pageSizeBytes: Long = org.apache.spark.SparkEnv.get.memoryManager.pageSizeBytes
+
+  /** Block until every queued listener event has been delivered. Spark
+    * posts task and job events asynchronously, so a listener read right
+    * after an action can miss that action's last events.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

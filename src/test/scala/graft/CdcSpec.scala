@@ -38,35 +38,6 @@ class CdcSpec extends SparkSpecBase {
       Seq((1L, "a2")))
   }
 
-  test("streamingCdcApply: final emissions equal batch mergeApply over all batches") {
-    import java.nio.file._
-    import org.apache.spark.sql.expressions.Window
-    val b1 = Seq(
-      (1L, "a", 10L, 1L, "I"), (2L, "b", 20L, 2L, "I"), (3L, "c", 30L, 3L, "I"))
-      .toDF("id", "name", "v", "seq", "op")
-    val b2 = Seq(
-      (2L, "b2", 21L, 4L, "U"), (3L, "c", 30L, 5L, "D"), (4L, "d", 40L, 6L, "I"),
-      (1L, "stale", 99L, 0L, "U")) // lower seq than state: must be ignored
-      .toDF("id", "name", "v", "seq", "op")
-    val dir = Files.createTempDirectory("graft_stream_cdc")
-    b1.coalesce(1).write.parquet(s"$dir/a")
-    b2.coalesce(1).write.parquet(s"$dir/b")
-    val stream = spark.readStream.schema(b1.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/*")
-    graft.streaming.StreamingEvents.runToMemory(
-      graft.streaming.StreamingEvents.streamingCdcApply(stream),
-      "stream_cdc", outputMode = "update")
-    val fin = spark.table("stream_cdc")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("seq").desc)))
-      .filter(col("rn") === 1 && !col("is_deleted"))
-      .select("id", "name", "v")
-    val emptySnap = Seq.empty[(Long, String, Long)].toDF("id", "name", "v")
-    val batch = Cdc.mergeApply(emptySnap, b1.unionByName(b2), "id")
-    assert(fin.exceptAll(batch).count() == 0 && batch.exceptAll(fin).count() == 0)
-    assert(batch.count() == 3) // keys 1, 2, 4; key 3 deleted
-  }
-
   test("Ivm.mergeAggState: merge of split states equals direct aggregate; closed under itself") {
     import graft.engine.Ivm
     val rows = Seq(

@@ -32,20 +32,6 @@ class SessionSpec extends SparkSpecBase {
     assert(providers.exists(_.isInstanceOf[GraftExtensions]))
   }
 
-  private def sourcesContaining(needle: String): Seq[String] = {
-    val roots = Seq("src/main/scala", "src/test/scala").map(java.nio.file.Paths.get(_))
-    roots.foreach(r => assert(java.nio.file.Files.isDirectory(r), s"$r not found"))
-    roots.flatMap { root =>
-      val files = java.nio.file.Files.walk(root)
-      try files.iterator.asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter(p => java.nio.file.Files.readString(p).contains(needle))
-        .map(_.toString)
-        .toList
-      finally files.close()
-    }
-  }
-
   // the needles are split so this file does not match itself
   test("graft/Session.scala is the only source that builds a SparkSession") {
     assert(sourcesContaining("SparkSession" + ".builder") ==
