@@ -1,5 +1,6 @@
 package graft
 import java.lang.management.ManagementFactory
+import graft.engine.Catalog
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
@@ -184,9 +185,9 @@ object Bench {
     // window.
     try {
       import org.apache.spark.sql.functions.{broadcast, col, expr, max, sum}
-      val warm = spark.read.parquet(s"$sfDir/region.parquet")
+      val warm = Catalog.read(spark, s"$sfDir/region.parquet")
       warm.groupBy("r_name").count().count()
-      val n = spark.read.parquet(s"$sfDir/nation.parquet")
+      val n = Catalog.read(spark, s"$sfDir/nation.parquet")
       n.join(broadcast(warm), n("n_regionkey") === warm("r_regionkey")).count()
       n.join(n.select(col("n_nationkey").as("k")),
         col("n_nationkey") === col("k"), "left_semi").count()
@@ -196,7 +197,7 @@ object Bench {
       // lambda-eval and DECIMAL codegen families the embedding/k-means keys
       // use (measured: the first decimal HOF plan otherwise pays ~3-4s of
       // one-time JIT inside whatever key runs it first)
-      spark.read.parquet(s"$sfDir/embeddings.parquet").limit(32)
+      Catalog.read(spark, s"$sfDir/embeddings.parquet").limit(32)
         .select(expr("round(aggregate(zip_with(embedding, embedding, " +
           "(a, b) -> CAST(a AS DOUBLE) * b), CAST(0 AS DOUBLE), " +
           "(acc, x) -> acc + x), 9)").as("d"),
@@ -207,7 +208,7 @@ object Bench {
       // and the ADC decimal-sum path — otherwise the FIRST similarity key
       // the map iterates absorbs ~2s of one-time JIT
       graft.analytics.Similarity.ivfPqTopK(
-        spark.read.parquet(s"$sfDir/embeddings.parquet").limit(64),
+        Catalog.read(spark, s"$sfDir/embeddings.parquet").limit(64),
         queryId = 0L, k = 1).count()
       // materialize the deployed IVF-PQ index as SETUP (skipped when a
       // fresh one already exists on disk): index builds are amortized
@@ -216,7 +217,7 @@ object Bench {
       // query — the probe — while the fused cosine_topk_ivfpq key still
       // times the full build each run
       graft.analytics.Similarity.ivfPqIndexBuildIfStale(
-        spark.read.parquet(s"$sfDir/embeddings.parquet"),
+        Catalog.read(spark, s"$sfDir/embeddings.parquet"),
         graft.analytics.Similarity.defaultIndexDir(sfDir) + "/ivfpq",
         trainMod = 4)
       // tiny curation pass (48 docs end-to-end): JITs the md5-fingerprint,
@@ -225,12 +226,12 @@ object Bench {
       // (curation_audit in registration order) otherwise absorbed ~10s of
       // one-time JIT (rep1 12.5s vs warm rep2 2.5s)
       graft.analytics.Curation.curationAudit(
-        spark.read.parquet(s"$sfDir/documents.parquet").limit(48)).count()
+        Catalog.read(spark, s"$sfDir/documents.parquet").limit(48)).count()
       // tiny standalone-PQ pass: pqTopK trains its codebooks on a
       // different Lloyd chain than the fused IVF-PQ warmed above
       // (measured r11: cosine_topk_pq rep1 6.3s vs warm rep2 1.7s)
       graft.analytics.Similarity.pqTopK(
-        spark.read.parquet(s"$sfDir/embeddings.parquet").limit(64),
+        Catalog.read(spark, s"$sfDir/embeddings.parquet").limit(64),
         queryId = 0L, k = 1).count()
       // one tiny subsetter pass over the two smallest tables: JITs the
       // semi/anti-join + union + checkpoint code paths the subset keys use.
@@ -244,7 +245,7 @@ object Bench {
             Seq(InitialTarget("nation", where = Some("n_nationkey % 5 = 0"))),
           fkAugmentation = Seq(
             Fk("nation", Seq("n_regionkey"), "region", Seq("r_regionkey"))))
-        val src = graft.engine.Catalog.load(spark, sfDir, Seq("region", "nation"))
+        val src = Catalog.load(spark, sfDir, Seq("region", "nation"))
         new graft.engine.Subsetter(cfg, src, materializeThreshold = 0L)
           .run().values.foreach(_.count())
       }

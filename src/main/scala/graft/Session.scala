@@ -30,10 +30,6 @@ object Session {
     // events.parquet may carry TIMESTAMP(NANOS), which Spark 4 rejects by
     // default; read it as a long and convert in EventTime.toNanos
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    // bare count()/min/max over parquet resolve from footer statistics
-    // instead of scanning — the subset report and row-count surfaces are
-    // metadata-only at any scale
-    "spark.sql.parquet.aggregatePushdown" -> "true",
     // CPU-bound analytic kernels (simhash/jaccard/minhash joins) are tiny
     // in BYTES but heavy per row; the default 1MB AQE coalesce floor
     // serializes them onto a handful of cores (measured 3x on

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.engine.Catalog
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -42,7 +43,7 @@ object Verify {
           .parquet(s"$outDir/$name")
         // row echo off the written (tiny, single-file) snapshot — visible
         // zero-row results are a first-line diagnostic in the driver log
-        val n = spark.read.parquet(s"$outDir/$name").count()
+        val n = Catalog.rowCount(Catalog.read(spark, s"$outDir/$name"))
         println(s"[verify] $name rows=$n")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.engine.Catalog
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -192,14 +193,12 @@ object Similarity {
 
   /** Corpus size for the adaptive dials (nlist / queryMod), read from the
     * PRE-repartition input: `repartition` never changes the count, and
-    * WHEN the input is a bare parquet scan in a session with
-    * `spark.sql.parquet.aggregatePushdown` (the Bench/Verify/tool
-    * sessions), the count resolves from footer statistics instead of
-    * paying a scan+shuffle job per key just to pick a dial. An upstream
-    * filter or projection defeats the pushdown — the count is then a
-    * plain (cheap, correct) scan job.
+    * WHEN the input is a bare stored Parquet table, [[Catalog.rowCount]]
+    * sums its footer row counts instead of paying a scan job per key just
+    * to pick a dial. An upstream filter or projection makes it a plain
+    * (cheap, correct) count job.
     */
-  private def countInput(embeddings: DataFrame): Long = embeddings.count()
+  private def countInput(embeddings: DataFrame): Long = Catalog.rowCount(embeddings)
 
   /** Nearest `n` cells per vector by squared-L2 distance (the k-means
     * metric). Distances are sequential-fold IEEE-double sums rounded to 9

@@ -1,8 +1,16 @@
 package graft.engine
 
 import java.nio.file.{Files, Paths}
+import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graft.PlanBuilder
+import org.apache.spark.sql.types.StructType
 
 /** The table container: a name → DataFrame map over a directory of Parquet
   * files, replacing the reference's live database catalog
@@ -20,13 +28,81 @@ object Catalog {
     if (split.length > 1) split(1) else split(0)
   }
 
+  // (session UUID, path) → (session, file signature, schema)
+  private val schemas = TrieMap.empty[(String, String), (SparkSession, String, StructType)]
+
+  /** Read the stored Parquet table at `path` (a file or a directory tree) —
+    * the one way stored tables are read. Spark infers a schema with a
+    * one-task job on every plain `spark.read.parquet`; here the inferred
+    * schema is kept per (session, path) and reused while the path's
+    * [[fileSignature]] is unchanged, so only the first read of a table pays
+    * that job. Entries of stopped sessions are dropped on each call. A path
+    * with no local files is read uncached.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    schemas.filterInPlace { case (_, (s, _, _)) => !s.sparkContext.isStopped }
+    val key = (PlanBuilder.sessionUUID(spark), path)
+    val sig = fileSignature(path)
+    schemas.get(key) match {
+      case Some((_, `sig`, schema)) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        if (sig.nonEmpty) schemas.put(key, (spark, sig, df.schema))
+        df
+    }
+  }
+
+  /** Freshness signature of the files at `path` (a file, or every file in a
+    * directory tree): a hash of their names, sizes and mtimes, so it changes
+    * whenever a table is rewritten. Empty when `path` holds no local file.
+    */
+  def fileSignature(path: String): String = {
+    val root = Paths.get(path)
+    if (!Files.exists(root)) ""
+    else {
+      val walk = Files.walk(root)
+      val sig =
+        try walk.iterator.asScala.map(_.toFile).filter(_.isFile)
+          .map(f => s"${f.getName}:${f.length}:${f.lastModified}").toSeq
+        finally walk.close()
+      if (sig.isEmpty) ""
+      else f"${scala.util.hashing.MurmurHash3.stringHash(sig.sorted.mkString("|"))}%08x"
+    }
+  }
+
+  /** Row count of `df`. A bare, unpartitioned Parquet table of at most
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files is
+    * counted in this JVM from the row counts in its file footers, with no
+    * Spark job (the reference likewise reports table sizes from statistics,
+    * `psql_database_helper.py:166-169`). Anything else — a filtered or
+    * derived plan, an in-memory relation, a partitioned or larger table —
+    * is counted by `df.count()`.
+    */
+  def rowCount(df: DataFrame): Long = df.queryExecution.analyzed match {
+    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+        if fs.fileFormat.isInstanceOf[ParquetFileFormat] && fs.partitionSchema.isEmpty =>
+      val session = fs.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val files = fs.location.inputFiles
+      if (files.length > session.sessionState.conf.parallelPartitionDiscoveryThreshold)
+        df.count()
+      else {
+        val conf = session.sessionState.newHadoopConfWithOptions(fs.options)
+        files.iterator.map { f =>
+          val reader = ParquetFileReader.open(
+            HadoopInputFile.fromPath(new Path(new java.net.URI(f)), conf))
+          try reader.getRecordCount finally reader.close()
+        }.sum
+      }
+    case _ => df.count()
+  }
+
   /** Load every `*.parquet` under `dir` as a table named by file basename. */
   def loadDir(spark: SparkSession, dir: String): Map[String, DataFrame] =
     Files.list(Paths.get(dir)).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .map { p =>
         val name = p.getFileName.toString.stripSuffix(".parquet")
-        name -> spark.read.parquet(p.toString)
+        name -> read(spark, p.toString)
       }
       .toMap
 
@@ -34,7 +110,7 @@ object Catalog {
     * looked up by bare table name).
     */
   def load(spark: SparkSession, dir: String, tables: Seq[String]): Map[String, DataFrame] =
-    tables.map(t => t -> spark.read.parquet(s"$dir/${tableName(t)}.parquet")).toMap
+    tables.map(t => t -> read(spark, s"$dir/${tableName(t)}.parquet")).toMap
 
   /** Load/save a single table in any Spark DataSource format — the
     * source/sink abstraction matching the reference's pluggable database

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-of-run tabulation: per-table (source rows, dest rows, ratio) —
-  * /root/reference/result_tabulator.py:6-22. `df.count()` on Parquet reads
-  * footer row counts, so this stays cheap even at scale.
+  * the reference's `result_tabulator.py:6-22`. Counts go through
+  * [[Catalog.rowCount]]: stored source tables are counted from their Parquet
+  * footers with no Spark job; derived destination tables run a count job.
   */
 object Report {
 
@@ -17,14 +18,15 @@ object Report {
       source: Map[String, DataFrame],
       dest: Map[String, DataFrame]): Seq[TableReport] =
     source.keys.toSeq.sorted.map { t =>
-      TableReport(t, source(t).count(), dest.get(t).map(_.count()).getOrElse(0L))
+      TableReport(t, Catalog.rowCount(source(t)),
+        dest.get(t).map(Catalog.rowCount).getOrElse(0L))
     }
 
   /** The same report as a single lazy DataFrame: one Spark job computing all
     * per-table count aggregates in parallel, instead of 2N serial driver-side
-    * `count()` actions. Each side collapses to a 1-row aggregate (footer
-    * metadata under parquet aggregate pushdown), so the cross join is a
-    * trivial 1×1 nested loop.
+    * `count()` actions. Each side collapses to a 1-row aggregate (a scan:
+    * Spark's V1 parquet source answers no aggregate from footers), so the
+    * cross join is a trivial 1×1 nested loop.
     */
   def tabulateDf(
       spark: SparkSession,

@@ -32,12 +32,12 @@ final class Subsetter(
     materialize: DataFrame => DataFrame = Subsetter.defaultMaterialize,
     materializeThreshold: Long = 50000L) {
 
-  // Checkpoint only tables whose *source* is large (parquet footer counts are
-  // ~free): cutting lineage matters where re-computation is expensive; for
-  // small dimension tables an eager checkpoint job costs more than the lazy
-  // recompute it would save.
+  // Checkpoint only tables whose *source* is large (stored tables are
+  // counted from their Parquet footers, with no Spark job): cutting lineage
+  // matters where re-computation is expensive; for small dimension tables
+  // an eager checkpoint job costs more than the lazy recompute it would save.
   private lazy val sourceCounts: Map[String, Long] =
-    source.map { case (t, df) => t -> df.count() }
+    source.map { case (t, df) => t -> Catalog.rowCount(df) }
 
   private def cut(table: String, df: DataFrame): DataFrame =
     if (sourceCounts.getOrElse(table, Long.MaxValue) >= materializeThreshold)

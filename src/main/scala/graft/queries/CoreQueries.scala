@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.engine.Ops
+import graft.engine.{Catalog, Ops}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 object CoreQueries {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    s.read.parquet(s"$dir/$n.parquet")
+    Catalog.read(s, s"$dir/$n.parquet")
 
   /** Deterministic 10% sample of orders — the t2 stand-in for Bernoulli
     * sampling (SURVEY.md §7.3 item 3).
@@ -538,8 +538,8 @@ object CoreQueries {
     }),
 
     // Table-statistics collection (ANALYZE shape): count / min / max /
-    // distinct — count+min+max resolve from parquet footer statistics
-    // under spark.sql.parquet.aggregatePushdown (metadata-only at scale)
+    // distinct — a scan of the table (Spark's parquet source is V1, so no
+    // aggregate is answered from footer statistics)
     "table_stats_orders" -> ((s, dir) =>
       t(s, dir, "orders").agg(
         count(lit(1)).as("n_rows"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.analytics._
+import graft.engine.Catalog
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -52,20 +53,6 @@ object ExtensionQueries {
     */
   private val PinFormatVersion = 1
 
-  /** Cheap freshness signature of a fixture dir: name/size/mtime of every
-    * file one level under each table dir. The driver's testdata is static,
-    * so in practice this changes only when a fixture is regenerated.
-    */
-  private def dirSignature(dir: String): String = {
-    def files(f: java.io.File): Array[java.io.File] =
-      Option(f.listFiles()).getOrElse(Array.empty)
-    val all = files(new java.io.File(dir)).flatMap(f =>
-      if (f.isDirectory) files(f) else Array(f)).filter(_.isFile)
-    val sig = all.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .sorted.mkString("|")
-    f"v$PinFormatVersion-${scala.util.hashing.MurmurHash3.stringHash(sig)}%08x"
-  }
-
   /** Load a session-invariant pinned relation from its parquet snapshot
     * under target/pins, rebuilding (and re-snapshotting) when the source
     * dir's signature says the snapshot is stale. In a deployment these are
@@ -78,7 +65,7 @@ object ExtensionQueries {
     */
   private def diskPinned(s: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame = {
-    val sig = dirSignature(dir)
+    val sig = s"v$PinFormatVersion-${Catalog.fileSignature(dir)}"
     val path = "target/pins/" +
       dir.replaceAll("[^A-Za-z0-9._-]", "_").stripPrefix("_") + s"/$name"
     val sigPath = java.nio.file.Paths.get(s"$path.sig")
@@ -132,7 +119,7 @@ object ExtensionQueries {
       tokenGraphEdges(s, dir).distinct()))
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$n.parquet")
+    val df = Catalog.read(s, s"$dir/$n.parquet")
     if (n == "events") {
       EventTime.requireEventTime(n, df, "ts")
       EventTime.toNanos(df)

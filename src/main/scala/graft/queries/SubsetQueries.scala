@@ -4,6 +4,7 @@ import graft.config._
 import graft.engine.{Catalog, Subsetter}
 import graft.graph.Fk
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PlanBuilder
 
 /** End-to-end verification of the middle-out subsetter: one canonical config
   * (FIXTURES.md "representative subset-config fixture", made deterministic
@@ -53,14 +54,8 @@ object SubsetQueries {
   private val cache =
     scala.collection.concurrent.TrieMap.empty[String, Map[String, DataFrame]]
 
-  // the source catalog (schema footer reads) is config-independent — share
-  // it across the fixture and multi-target runs
-  private val sourceCache =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, DataFrame]]
-
   private def sourceFor(s: SparkSession, dir: String): Map[String, DataFrame] =
-    sourceCache.getOrElseUpdate(s"$dir#${System.identityHashCode(s)}",
-      Catalog.load(s, dir, starTables))
+    Catalog.load(s, dir, starTables)
 
   /** The composite-key source catalog: the star tables plus a partsupp-like
     * parent keyed by (part, supplier), derived DETERMINISTICALLY from
@@ -102,7 +97,7 @@ object SubsetQueries {
       s: SparkSession, dir: String, key: String, cfg: SubsetConfig,
       src: (SparkSession, String) => Map[String, DataFrame] = sourceFor)
       : Map[String, DataFrame] =
-    cache.getOrElseUpdate(s"$dir#$key#${System.identityHashCode(s)}", {
+    cache.getOrElseUpdate(s"$dir#$key#${PlanBuilder.sessionUUID(s)}", {
       // every output table is consumed several times by this surface (its
       // own key + the report + downstream closures of sibling keys), so pin
       // each one once regardless of the Subsetter's size-aware policy, and

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{SparkEntry, TaskMetrics}
+import graft.engine.Catalog
 
 /** Time query keys with their task metrics and Spark jobs (dev tool):
   *
@@ -44,7 +45,7 @@ object Trace {
     // lack the other tables — build the ANN index only where vectors exist
     if (new java.io.File(s"$dir/embeddings.parquet").exists())
       graft.analytics.Similarity.ivfPqIndexBuildIfStale(
-        spark.read.parquet(s"$dir/embeddings.parquet"),
+        Catalog.read(spark, s"$dir/embeddings.parquet"),
         graft.analytics.Similarity.defaultIndexDir(dir) + "/ivfpq",
         trainMod = 4)
     println(f"SETUP total ${(System.nanoTime() - t0) / 1e9}%.1fs  dir=$dir")

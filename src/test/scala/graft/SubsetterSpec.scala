@@ -129,6 +129,25 @@ class SubsetterSpec extends SparkSpecBase {
       new java.io.ByteArrayInputStream(Array.emptyByteArray)) == json)
   }
 
+  test("job budget: a repeated fixture run plus a source-vs-source report runs no Spark job") {
+    import graft.engine.{Report, SubsetRunner}
+    // every sf0.001 table is below the 50k-row checkpoint threshold, so with
+    // schemas and row counts taken from Parquet metadata nothing here runs
+    // a job; the untimed first run reads each table's schema once
+    def once(): Unit = {
+      val res = SubsetRunner.run(spark, SubsetQueries.fixtureConfig, sfDir)
+      Report.tabulate(res.source, res.source)
+    }
+    once()
+    val metrics = TaskMetrics(spark)
+    try {
+      val before = metrics.snap()
+      once()
+      val d = metrics.snap() - before
+      assert(d.jobs == 0, d.jobLog)
+    } finally spark.sparkContext.removeSparkListener(metrics)
+  }
+
   test("determinism: two runs produce identical orders output") {
     val d1 = new Subsetter(SubsetQueries.fixtureConfig, source).run()
     val d2 = new Subsetter(SubsetQueries.fixtureConfig, source).run()
