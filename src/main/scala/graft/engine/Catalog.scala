@@ -1,6 +1,6 @@
 package graft.engine
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{FileVisitOption, Files, Paths}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
@@ -31,10 +31,10 @@ object Catalog {
   // (session UUID, path) → (session, file signature, schema)
   private val schemas = TrieMap.empty[(String, String), (SparkSession, String, StructType)]
 
-  /** Read the stored Parquet table at `path` (a file or a directory tree) —
-    * the one way stored tables are read. Spark infers a schema with a
-    * one-task job on every plain `spark.read.parquet`; here the inferred
-    * schema is kept per (session, path) and reused while the path's
+  /** Read the stored Parquet table at `path` (a file or a directory tree):
+    * the way source tables and pin snapshots are read. Spark infers a
+    * schema with a one-task job on every plain `spark.read.parquet`; here
+    * the inferred schema is kept per (session, path) and reused while the path's
     * [[fileSignature]] is unchanged, so only the first read of a table pays
     * that job. Entries of stopped sessions are dropped on each call. A path
     * with no local files is read uncached.
@@ -53,14 +53,15 @@ object Catalog {
   }
 
   /** Freshness signature of the files at `path` (a file, or every file in a
-    * directory tree): a hash of their names, sizes and mtimes, so it changes
-    * whenever a table is rewritten. Empty when `path` holds no local file.
+    * directory tree, following symbolic links): a hash of their names, sizes
+    * and mtimes, so it changes whenever a table is rewritten. Empty when
+    * `path` holds no local file.
     */
   def fileSignature(path: String): String = {
     val root = Paths.get(path)
     if (!Files.exists(root)) ""
     else {
-      val walk = Files.walk(root)
+      val walk = Files.walk(root, FileVisitOption.FOLLOW_LINKS)
       val sig =
         try walk.iterator.asScala.map(_.toFile).filter(_.isFile)
           .map(f => s"${f.getName}:${f.length}:${f.lastModified}").toSeq
@@ -70,29 +71,23 @@ object Catalog {
     }
   }
 
-  /** Row count of `df`. A bare, unpartitioned Parquet table of at most
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files is
-    * counted in this JVM from the row counts in its file footers, with no
-    * Spark job (the reference likewise reports table sizes from statistics,
+  /** Row count of `df`. A bare, unpartitioned Parquet table is counted in
+    * this JVM from the row counts in its file footers, with no Spark job
+    * (the reference likewise reports table sizes from statistics,
     * `psql_database_helper.py:166-169`). Anything else — a filtered or
-    * derived plan, an in-memory relation, a partitioned or larger table —
-    * is counted by `df.count()`.
+    * derived plan, an in-memory relation, a partitioned table — is counted
+    * by `df.count()`.
     */
   def rowCount(df: DataFrame): Long = df.queryExecution.analyzed match {
     case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
         if fs.fileFormat.isInstanceOf[ParquetFileFormat] && fs.partitionSchema.isEmpty =>
-      val session = fs.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val files = fs.location.inputFiles
-      if (files.length > session.sessionState.conf.parallelPartitionDiscoveryThreshold)
-        df.count()
-      else {
-        val conf = session.sessionState.newHadoopConfWithOptions(fs.options)
-        files.iterator.map { f =>
-          val reader = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new Path(new java.net.URI(f)), conf))
-          try reader.getRecordCount finally reader.close()
-        }.sum
-      }
+      val conf = fs.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.newHadoopConfWithOptions(fs.options)
+      fs.location.inputFiles.iterator.map { f =>
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new Path(new java.net.URI(f)), conf))
+        try reader.getRecordCount finally reader.close()
+      }.sum
     case _ => df.count()
   }
 

@@ -78,7 +78,7 @@ object ExtensionQueries {
       java.nio.file.Files.createDirectories(sigPath.getParent)
       java.nio.file.Files.writeString(sigPath, sig)
     }
-    s.read.parquet(path)
+    Catalog.read(s, path)
   }
 
   private def pinned(

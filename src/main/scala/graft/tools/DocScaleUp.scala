@@ -1,6 +1,5 @@
 package graft.tools
 
-import graft.engine.Catalog
 import org.apache.spark.sql.functions._
 
 /** Documents-only fixture scale-up (dev tool): the text-side companion to
@@ -25,7 +24,7 @@ object DocScaleUp {
     val out = args(1)
     val mult = if (args.length > 2) args(2).toInt else 10
     val spark = graft.Session()
-    val docs = Catalog.read(spark, s"$src/documents.parquet")
+    val docs = spark.read.parquet(s"$src/documents.parquet")
     val base = docs.agg(max(col("doc_id")).cast("long")).head.getLong(0) + 1
     val t0 = System.nanoTime()
     (0 until mult).map { i =>

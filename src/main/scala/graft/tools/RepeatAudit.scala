@@ -2,7 +2,6 @@ package graft.tools
 
 import scala.collection.mutable
 import graft.SparkEntry
-import graft.engine.Catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -166,7 +165,7 @@ object RepeatAudit {
     * version MUST NOT.
     */
   def selfTest(spark: SparkSession, dir: String): Unit = {
-    val edges = Catalog.read(spark, s"$dir/documents.parquet")
+    val edges = spark.read.parquet(s"$dir/documents.parquet")
       .selectExpr("doc_id % 97 AS id_a", "(doc_id * 7) % 97 AS id_b")
     val uncut = graft.analytics.Dedup.linkPredictionTopK(
       edges, materialize = graft.engine.Materialize.none)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import graft.engine.Catalog
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,7 +26,7 @@ object ScaleUp {
     val mult = if (args.length > 2) args(2).toInt else 10
     val spark = graft.Session()
 
-    def rd(n: String): DataFrame = Catalog.read(spark, s"$src/$n.parquet")
+    def rd(n: String): DataFrame = spark.read.parquet(s"$src/$n.parquet")
     def base(df: DataFrame, c: String): Long =
       df.agg(max(col(c)).cast("long")).head.getLong(0) + 1
     // key-domain bases shared across tables so every FK stays closed;

@@ -1,6 +1,5 @@
 package graft.tools
 
-import graft.engine.Catalog
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -45,7 +44,7 @@ object VecScaleUp {
     val mult = if (args.length > 2) args(2).toInt else 10
     val dupPct = if (args.length > 3) args(3).toDouble else 100.0
     val spark = graft.Session()
-    val emb = Catalog.read(spark, s"$src/embeddings.parquet")
+    val emb = spark.read.parquet(s"$src/embeddings.parquet")
     val base = emb.agg(max(col("vec_id")).cast("long")).head.getLong(0) + 1
     // corpus RMS coordinate — sizes the heavy noise relative to the data
     // (‖noise‖/‖v‖ ≈ 0.75 for per-coord uniform[-A, A] with

@@ -73,4 +73,21 @@ class CatalogSpec extends SparkSpecBase {
       assert(Catalog.rowCount(back) == 7L)
     }
   }
+
+  test("the file signature follows symlinked directories and changes with the table behind them") {
+    withTempDir { dir =>
+      val table = s"$dir/real/t.parquet"
+      spark.range(5).write.parquet(table)
+      Files.createDirectories(dir.resolve("sf"))
+      Files.createSymbolicLink(dir.resolve("sf/t.parquet"), dir.resolve("real/t.parquet"))
+      Files.createSymbolicLink(dir.resolve("sfLink"), dir.resolve("sf"))
+      val paths = Seq(s"$dir/sf", s"$dir/sfLink", s"$dir/sfLink/t.parquet")
+      val before = paths.map(Catalog.fileSignature)
+      assert(before.forall(_.nonEmpty), before)
+      spark.range(9).write.mode("overwrite").parquet(table)
+      val after = paths.map(Catalog.fileSignature)
+      before.zip(after).foreach { case (b, a) => assert(a.nonEmpty && a != b, (b, a)) }
+      assert(Catalog.rowCount(Catalog.read(spark, s"$dir/sfLink/t.parquet")) == 9L)
+    }
+  }
 }
