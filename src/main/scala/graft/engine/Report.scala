@@ -4,9 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-of-run tabulation: per-table (source rows, dest rows, ratio) —
-  * the reference's `result_tabulator.py:6-22`. Counts go through
-  * [[Catalog.rowCount]]: stored source tables are counted from their Parquet
-  * footers with no Spark job; derived destination tables run a count job.
+  * the reference's `result_tabulator.py:6-22`, which counts the destination
+  * database after the copy. Counts go through [[Catalog.rowCount]]: stored
+  * source tables are counted from their Parquet footers, and destination
+  * tables that [[Catalog.save]] has written are counted from the footers of
+  * the written files, both with no Spark job. A destination table that was
+  * never saved, or whose written files have changed since, runs a count job.
   */
 object Report {
 

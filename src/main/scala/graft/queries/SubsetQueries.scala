@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.config._
-import graft.engine.{Catalog, Subsetter}
+import graft.engine.{Catalog, Parallel, Subsetter}
 import graft.graph.Fk
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.PlanBuilder
@@ -105,12 +105,7 @@ object SubsetQueries {
       // wall-clock of the slowest table, not the serial sum.
       val out = new Subsetter(cfg, src(s, dir)).run()
         .map { case (t, df) => t -> df.persist() }
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.DurationInt
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(
-        Future.sequence(out.values.toSeq.map(df => Future(df.count()))),
-        30.minutes)
+      Parallel.run(s, out.values.toSeq.map(df => () => df.count()))
       out
     })
 

@@ -10,11 +10,13 @@ import graft.engine.Catalog
   * Setup builds the pinned relations the keys read and, where the
   * directory has vectors, the on-disk ANN index, so no key absorbs a
   * one-time build. Each key then runs twice (rep 1 cold, rep 2 warm) and
-  * prints one `SWEEP` line: both walls, rows, rep 1's task metrics, rep 2's
-  * task CPU (`cpu2`) and rep 1's job count. Below it, one line per job of
-  * the warm rep gives its span from the rep's start, its stage and task
-  * counts and its call site, so a multi-job operator shows where its wall
-  * clock goes. `scripts/ab_sweep_compare.py` diffs two logs. No keys runs
+  * prints one `SWEEP` line: both walls, rows, rep 1's task metrics
+  * (`taskRun`, `taskCpu`, `gc`, `spill`, `shufW`, `tasks`), rep 2's task CPU
+  * (`cpu2`), rep 1's job count (`jobs`) and rep 2's (`jobs2`). Below it, one
+  * line per job of the warm rep (`jobs2` lines) gives its span from the
+  * rep's start, its stage and task counts and its call site, so a
+  * multi-job operator shows where its wall clock goes.
+  * `scripts/ab_sweep_compare.py` diffs two logs. No keys runs
   * [[defaultKeys]]; `ALL` runs every key.
   */
 object Trace {
@@ -69,7 +71,7 @@ object Trace {
         f"gc=${m1.gcMs}%5dms " +
         f"spill=${(m1.spillMemB + m1.spillDiskB) / mb}%5dMB " +
         f"shufW=${m1.shuffleWriteB / mb}%6dMB tasks=${m1.tasks}%5d " +
-        f"jobs=${m1.jobs}%4d")
+        f"jobs=${m1.jobs}%4d jobs2=${m2.jobs}%4d")
       m2.jobLog.foreach { j =>
         val s = (j.startMs - start2) / 1e3
         val e = (j.endMs - start2) / 1e3

@@ -1,24 +1,28 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 import graft.engine.Catalog
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, raise_error}
 
 /** Stored tables are read and counted from Parquet metadata: `rowCount`
   * agrees with `count()` on single- and multi-file tables and falls back to
   * it on anything derived; a repeated `read` and a `rowCount` run no Spark
-  * job; a rewritten table is read with its new schema.
+  * job; a rewritten table is read with its new schema. `save` writes its
+  * tables together, and what it wrote is counted from the written files.
   */
 class CatalogSpec extends SparkSpecBase {
 
   private def withTempDir[T](body: Path => T): T = {
     val dir = Files.createTempDirectory("graft_catalog")
     try body(dir)
-    finally {
-      val walk = Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]).forEach(p => Files.delete(p))
-      finally walk.close()
-    }
+    finally deleteTree(dir)
+  }
+
+  private def deleteTree(dir: Path): Unit = {
+    val walk = Files.walk(dir)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]).forEach(p => Files.delete(p))
+    finally walk.close()
   }
 
   test("rowCount equals count() on single-file and multi-file parquet") {
@@ -89,5 +93,101 @@ class CatalogSpec extends SparkSpecBase {
       before.zip(after).foreach { case (b, a) => assert(a.nonEmpty && a != b, (b, a)) }
       assert(Catalog.rowCount(Catalog.read(spark, s"$dir/sfLink/t.parquet")) == 9L)
     }
+  }
+
+  private def derived: Map[String, org.apache.spark.sql.DataFrame] = {
+    val orders = Catalog.read(spark, s"$sfDir/orders.parquet")
+    Map(
+      "orders" -> orders.filter(col("o_orderkey") % 10 === 0),
+      "main.customer" -> Catalog.read(spark, s"$sfDir/customer.parquet")
+        .join(orders.select(col("o_custkey").as("c_custkey")).distinct(), "c_custkey"),
+      "empty" -> orders.limit(0))
+  }
+
+  test("save records what it wrote: rowCount counts the written files with no job") {
+    withTempDir { dir =>
+      val out = derived
+      Catalog.save(out, dir.toString)
+      val metrics = TaskMetrics(spark)
+      try {
+        val before = metrics.snap()
+        val counts = out.map { case (t, df) => t -> Catalog.rowCount(df) }
+        val d = metrics.snap() - before
+        assert(d.jobs == 0, d.jobLog)
+        out.keys.foreach { t =>
+          val back = spark.read.parquet(s"$dir/${Catalog.tableName(t)}.parquet").count()
+          assert(counts(t) == back, t)
+        }
+        assert(counts("empty") == 0L && counts("orders") > 0L)
+      } finally spark.sparkContext.removeSparkListener(metrics)
+    }
+  }
+
+  test("rowCount of a saved DataFrame falls back once its output is rewritten or deleted") {
+    withTempDir { dir =>
+      val df = derived("orders")
+      val n = df.count()
+      val path = s"$dir/orders.parquet"
+      Catalog.save(Map("orders" -> df), dir.toString)
+      spark.range(n + 7).write.mode("overwrite").parquet(path)
+      assert(Catalog.rowCount(df) == n)
+      Catalog.save(Map("orders" -> df), dir.toString)
+      assert(Catalog.rowCount(df) == n)
+      deleteTree(Path.of(path))
+      assert(Catalog.rowCount(df) == n)
+    }
+  }
+
+  test("a DataFrame that was never saved is counted by a job") {
+    val df = derived("orders")
+    val metrics = TaskMetrics(spark)
+    try {
+      val before = metrics.snap()
+      val n = Catalog.rowCount(df)
+      val d = metrics.snap() - before
+      assert(d.jobs > 0)
+      assert(n == df.count())
+    } finally spark.sparkContext.removeSparkListener(metrics)
+  }
+
+  test("a failed table's error is rethrown after every other table is written") {
+    withTempDir { dir =>
+      val ok = (1 to 5).map(i => s"t$i" -> spark.range(0, 100L * i, 1, 2).toDF()).toMap
+      val bad = spark.range(10).select(raise_error(lit("boom in table bad")).as("x"))
+      val e = intercept[Throwable](Catalog.save(ok + ("bad" -> bad), dir.toString))
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(c => String.valueOf(c.getMessage).contains("boom in table bad")), e)
+      ok.foreach { case (t, df) =>
+        assert(Files.exists(dir.resolve(s"$t.parquet/_SUCCESS")), t)
+        assert(spark.read.parquet(s"$dir/$t.parquet").count() == df.count(), t)
+      }
+      assert(!Thread.getAllStackTraces.keySet.asScala.exists(
+        th => th.getName.startsWith("graft-parallel-") && th.isAlive))
+    }
+  }
+
+  test("save rejects two tables that would write one path, before any write") {
+    withTempDir { dir =>
+      val e = intercept[IllegalArgumentException](Catalog.save(
+        Map("a.t" -> spark.range(3).toDF(), "b.t" -> spark.range(4).toDF(),
+          "u" -> spark.range(5).toDF()), dir.toString))
+      assert(e.getMessage.contains("a.t") && e.getMessage.contains("b.t"), e.getMessage)
+      assert(Files.list(dir).count() == 0)
+    }
+  }
+
+  test("Parallel.run carries the caller's local properties into its jobs") {
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.phase", "parallel-spec")
+    try {
+      val seen = graft.engine.Parallel.run(spark, (1 to 6).map { i => () =>
+        val inJob = spark.range(1).rdd
+          .map(_ => org.apache.spark.TaskContext.get.getLocalProperty("graft.phase"))
+          .collect().head
+        (sc.getLocalProperty("graft.phase"), inJob, i)
+      })
+      assert(seen.map(_._3) == (1 to 6))
+      assert(seen.forall(s => s._1 == "parallel-spec" && s._2 == "parallel-spec"), seen)
+    } finally sc.setLocalProperty("graft.phase", null)
   }
 }

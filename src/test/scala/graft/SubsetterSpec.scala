@@ -145,6 +145,21 @@ class SubsetterSpec extends SparkSpecBase {
       once()
       val d = metrics.snap() - before
       assert(d.jobs == 0, d.jobLog)
+      // the report on the saved destination counts the written files
+      val out = java.nio.file.Files.createTempDirectory("graft_subset_out")
+      val res = SubsetRunner.run(spark, SubsetQueries.fixtureConfig, sfDir)
+      Catalog.save(res.dest, out.toString)
+      val beforeReport = metrics.snap()
+      val report = Report.tabulate(res.source, res.dest)
+      val r = metrics.snap() - beforeReport
+      assert(r.jobs == 0, r.jobLog)
+      val back = Catalog.loadDir(spark, out.toString).map { case (t, df) => t -> df.count() }
+      assert(report.map(t => t.table -> t.destRows).toMap == back)
+      assert(report.map(_.table) == res.source.keys.toSeq.sorted)
+      val walk = java.nio.file.Files.walk(out)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path])
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally walk.close()
     } finally spark.sparkContext.removeSparkListener(metrics)
   }
 
