@@ -71,16 +71,12 @@ object Catalog {
     }
   }
 
-  /** Row count of `df`, answered from Parquet metadata where possible (the
-    * reference likewise reports table sizes from statistics,
-    * `psql_database_helper.py:166-169`):
-    *   - a bare, unpartitioned Parquet table is counted in this JVM from the
-    *     row counts in its file footers, with no Spark job;
-    *   - a DataFrame that [[save]] wrote is counted the same way from the
-    *     files it wrote, while their [[fileSignature]] is the one recorded
-    *     after the write, so the count describes the output as written;
-    *   - anything else, or a written table whose files have since changed
-    *     or gone, is counted by `df.count()`.
+  /** Row count of `df`. A bare, unpartitioned Parquet table is counted in
+    * this JVM from the row counts in its file footers, with no Spark job
+    * (the reference likewise reports table sizes from statistics,
+    * `psql_database_helper.py:166-169`). Anything else — a filtered or
+    * derived plan, an in-memory relation, a partitioned table — is counted
+    * by `df.count()`.
     */
   def rowCount(df: DataFrame): Long = df.queryExecution.analyzed match {
     case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
@@ -92,20 +88,8 @@ object Catalog {
           HadoopInputFile.fromPath(new Path(new java.net.URI(f)), conf))
         try reader.getRecordCount finally reader.close()
       }.sum
-    case _ =>
-      Option(written.get(df)) match {
-        // read with the DataFrame's own schema: no schema-inference job
-        case Some((path, sig)) if fileSignature(path) == sig =>
-          rowCount(df.sparkSession.read.schema(df.schema).parquet(path))
-        case _ => df.count()
-      }
+    case _ => df.count()
   }
-
-  // DataFrame → (path, file signature after the write) for each table
-  // `save` wrote. Keys are held weakly, and a Dataset does not override
-  // `equals`, so an entry is found by identity and dies with its DataFrame.
-  private val written = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[DataFrame, (String, String)])
 
   /** Load every `*.parquet` under `dir` as a table named by file basename. */
   def loadDir(spark: SparkSession, dir: String): Map[String, DataFrame] =
@@ -190,10 +174,9 @@ object Catalog {
     * teardown+create, /root/reference/psql_database_creator.py:56-67).
     * The tables' writes are independent jobs and run together through
     * [[Parallel.run]]; a failed write does not stop the others, and its
-    * error is rethrown once all have ended. Each written DataFrame is
-    * recorded with its path, so [[rowCount]] counts it from the written
-    * files. A map in which two tables share a bare name (`a.t`, `b.t`) would
-    * write one directory twice, and is rejected before any write starts.
+    * error is rethrown once all have ended. A map in which two tables share
+    * a bare name (`a.t`, `b.t`) would write one directory twice, and is
+    * rejected before any write starts.
     */
   def save(out: Map[String, DataFrame], dir: String): Unit = {
     val clashes = out.keys.toSeq.groupBy(tableName).values.filter(_.size > 1)
@@ -202,9 +185,7 @@ object Catalog {
       s"tables would write the same path under $dir: ${clashes.mkString("; ")}")
     out.headOption.foreach { case (_, first) =>
       Parallel.run(first.sparkSession, out.toSeq.map { case (t, df) => () =>
-        val path = s"$dir/${tableName(t)}.parquet"
-        df.write.mode("overwrite").parquet(path)
-        written.put(df, (path, fileSignature(path)))
+        df.write.mode("overwrite").parquet(s"$dir/${tableName(t)}.parquet")
       })
     }
   }

@@ -4,12 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-of-run tabulation: per-table (source rows, dest rows, ratio) —
-  * the reference's `result_tabulator.py:6-22`, which counts the destination
-  * database after the copy. Counts go through [[Catalog.rowCount]]: stored
-  * source tables are counted from their Parquet footers, and destination
-  * tables that [[Catalog.save]] has written are counted from the footers of
-  * the written files, both with no Spark job. A destination table that was
-  * never saved, or whose written files have changed since, runs a count job.
+  * the reference's `result_tabulator.py:6-22`. Counts go through
+  * [[Catalog.rowCount]]: stored source tables are counted from their Parquet
+  * footers with no Spark job; derived destination tables run a count job.
+  * The tables are counted together through [[Parallel.run]], so their count
+  * jobs overlap instead of paying each one's fixed cost in turn.
   */
 object Report {
 
@@ -20,9 +19,11 @@ object Report {
   def tabulate(
       source: Map[String, DataFrame],
       dest: Map[String, DataFrame]): Seq[TableReport] =
-    source.keys.toSeq.sorted.map { t =>
-      TableReport(t, Catalog.rowCount(source(t)),
-        dest.get(t).map(Catalog.rowCount).getOrElse(0L))
+    source.headOption.fold(Seq.empty[TableReport]) { case (_, any) =>
+      Parallel.run(any.sparkSession, source.keys.toSeq.sorted.map { t => () =>
+        TableReport(t, Catalog.rowCount(source(t)),
+          dest.get(t).map(Catalog.rowCount).getOrElse(0L))
+      })
     }
 
   /** The same report as a single lazy DataFrame: one Spark job computing all

@@ -9,20 +9,18 @@ import org.apache.spark.sql.functions.{col, lit, raise_error}
   * agrees with `count()` on single- and multi-file tables and falls back to
   * it on anything derived; a repeated `read` and a `rowCount` run no Spark
   * job; a rewritten table is read with its new schema. `save` writes its
-  * tables together, and what it wrote is counted from the written files.
+  * tables together and rethrows a failed table's error after the others.
   */
 class CatalogSpec extends SparkSpecBase {
 
   private def withTempDir[T](body: Path => T): T = {
     val dir = Files.createTempDirectory("graft_catalog")
     try body(dir)
-    finally deleteTree(dir)
-  }
-
-  private def deleteTree(dir: Path): Unit = {
-    val walk = Files.walk(dir)
-    try walk.sorted(java.util.Comparator.reverseOrder[Path]).forEach(p => Files.delete(p))
-    finally walk.close()
+    finally {
+      val walk = Files.walk(dir)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]).forEach(p => Files.delete(p))
+      finally walk.close()
+    }
   }
 
   test("rowCount equals count() on single-file and multi-file parquet") {
@@ -93,61 +91,6 @@ class CatalogSpec extends SparkSpecBase {
       before.zip(after).foreach { case (b, a) => assert(a.nonEmpty && a != b, (b, a)) }
       assert(Catalog.rowCount(Catalog.read(spark, s"$dir/sfLink/t.parquet")) == 9L)
     }
-  }
-
-  private def derived: Map[String, org.apache.spark.sql.DataFrame] = {
-    val orders = Catalog.read(spark, s"$sfDir/orders.parquet")
-    Map(
-      "orders" -> orders.filter(col("o_orderkey") % 10 === 0),
-      "main.customer" -> Catalog.read(spark, s"$sfDir/customer.parquet")
-        .join(orders.select(col("o_custkey").as("c_custkey")).distinct(), "c_custkey"),
-      "empty" -> orders.limit(0))
-  }
-
-  test("save records what it wrote: rowCount counts the written files with no job") {
-    withTempDir { dir =>
-      val out = derived
-      Catalog.save(out, dir.toString)
-      val metrics = TaskMetrics(spark)
-      try {
-        val before = metrics.snap()
-        val counts = out.map { case (t, df) => t -> Catalog.rowCount(df) }
-        val d = metrics.snap() - before
-        assert(d.jobs == 0, d.jobLog)
-        out.keys.foreach { t =>
-          val back = spark.read.parquet(s"$dir/${Catalog.tableName(t)}.parquet").count()
-          assert(counts(t) == back, t)
-        }
-        assert(counts("empty") == 0L && counts("orders") > 0L)
-      } finally spark.sparkContext.removeSparkListener(metrics)
-    }
-  }
-
-  test("rowCount of a saved DataFrame falls back once its output is rewritten or deleted") {
-    withTempDir { dir =>
-      val df = derived("orders")
-      val n = df.count()
-      val path = s"$dir/orders.parquet"
-      Catalog.save(Map("orders" -> df), dir.toString)
-      spark.range(n + 7).write.mode("overwrite").parquet(path)
-      assert(Catalog.rowCount(df) == n)
-      Catalog.save(Map("orders" -> df), dir.toString)
-      assert(Catalog.rowCount(df) == n)
-      deleteTree(Path.of(path))
-      assert(Catalog.rowCount(df) == n)
-    }
-  }
-
-  test("a DataFrame that was never saved is counted by a job") {
-    val df = derived("orders")
-    val metrics = TaskMetrics(spark)
-    try {
-      val before = metrics.snap()
-      val n = Catalog.rowCount(df)
-      val d = metrics.snap() - before
-      assert(d.jobs > 0)
-      assert(n == df.count())
-    } finally spark.sparkContext.removeSparkListener(metrics)
   }
 
   test("a failed table's error is rethrown after every other table is written") {

@@ -145,22 +145,19 @@ class SubsetterSpec extends SparkSpecBase {
       once()
       val d = metrics.snap() - before
       assert(d.jobs == 0, d.jobLog)
-      // the report on the saved destination counts the written files
-      val out = java.nio.file.Files.createTempDirectory("graft_subset_out")
-      val res = SubsetRunner.run(spark, SubsetQueries.fixtureConfig, sfDir)
-      Catalog.save(res.dest, out.toString)
-      val beforeReport = metrics.snap()
-      val report = Report.tabulate(res.source, res.dest)
-      val r = metrics.snap() - beforeReport
-      assert(r.jobs == 0, r.jobLog)
-      val back = Catalog.loadDir(spark, out.toString).map { case (t, df) => t -> df.count() }
-      assert(report.map(t => t.table -> t.destRows).toMap == back)
-      assert(report.map(_.table) == res.source.keys.toSeq.sorted)
-      val walk = java.nio.file.Files.walk(out)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path])
-        .forEach(p => java.nio.file.Files.delete(p))
-      finally walk.close()
     } finally spark.sparkContext.removeSparkListener(metrics)
+  }
+
+  test("the report counts every table of both catalogs, in table order") {
+    import graft.engine.{Report, SubsetRunner}
+    val res = SubsetRunner.run(spark, SubsetQueries.fixtureConfig, sfDir)
+    val report = Report.tabulate(res.source, res.dest - "region")
+    assert(report.map(_.table) == res.source.keys.toSeq.sorted)
+    report.foreach { r =>
+      assert(r.sourceRows == res.source(r.table).count(), r)
+      assert(r.destRows == (if (r.table == "region") 0L else res.dest(r.table).count()), r)
+    }
+    assert(report.exists(r => r.destRows > 0 && r.destRows < r.sourceRows))
   }
 
   test("determinism: two runs produce identical orders output") {
