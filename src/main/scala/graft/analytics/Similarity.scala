@@ -2,7 +2,7 @@ package graft.analytics
 
 import graft.engine.Catalog
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -2029,38 +2029,20 @@ object Similarity {
     * `(u·10^6) div max|u|` (truncation toward zero in both engines). The
     * all-ones start makes the converged sign deterministic.
     *
-    * Scale shape: the Gram sweep is the ONLY data-sized work — one
-    * self-join co-partitioned on `vec_id` (d² rows per vector, map-side
-    * combined to d² partials per partition before the single shuffle on
-    * (i, j)). The d²-entry Gram is a parameter-sized artifact (like a PQ
-    * codebook); the `rounds` iterations run on it driver-side in exact
+    * Scale shape: the Gram sweep ([[embeddingGram]]) is the ONLY
+    * data-sized work. The d²-entry Gram is a parameter-sized artifact (like
+    * a PQ codebook); the `rounds` iterations run on it driver-side in exact
     * BigInt. Returns (dim, v_ppm) — the unit-∞-normalized component in
     * ppm.
     */
   def topComponentPower(embeddings: DataFrame, rounds: Int = 8): DataFrame = {
     val spark = embeddings.sparkSession
-    // the Gram is symmetric: emit only the upper triangle, and emit it
-    // with the `tri_products` codegen generator — one compiled loop per
-    // vector yields the d(d+1)/2 (i, j, xf_i·xf_j) rows that the former
-    // posexplode + co-partitioned self-join built through sort-merge
-    // machinery (measured: the join formulation was this key's whole
-    // task-CPU cost; products and quantization are unchanged bit-for-bit,
-    // so the DECIMAL Gram — and the oracle hash — are identical)
-    val coords = embeddings.repartition(col("vec_id"))
-      .select(expr("transform(embedding, x -> " +
-        "CAST(floor(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,16)) * 1000000) AS BIGINT))")
-        .as("xf"))
-    val gram = coords
-      .select(explode(expr("tri_products(xf)")).as("t"))
-      .select(col("t.i").as("i"), col("t.j").as("j"),
-        // ppm² products sum past BIGINT at full corpus row counts;
-        // DECIMAL(38,0) accumulation matches the oracle's HUGEINT
-        col("t.p").cast("decimal(38,0)").as("p"))
-      .groupBy(col("i"), col("j")).agg(sum(col("p")).as("g"))
+    val gram = embeddingGram(embeddings)
     // d² entries — parameter-sized (d=64 → 4096 entries), the documented
-    // bounded-collect class (codebooks, shortlists)
-    val gTri = gram.collect().map(r =>
-      (r.getInt(0), r.getInt(1)) -> BigInt(r.getDecimal(2).toBigInteger))
+    // bounded-collect class (codebooks, shortlists). An entry reached only
+    // through null slots sums to null and adds nothing, as in the oracle
+    val gTri = gram.collect().map(r => (r.getInt(0), r.getInt(1)) ->
+      Option(r.getDecimal(2)).fold(BigInt(0))(d => BigInt(d.toBigInteger)))
     val g = (gTri ++ gTri.collect { case ((i, j), v) if i != j => (j, i) -> v }).toMap
     val dims = g.keys.map(_._1).toSeq.distinct.sorted
     val scale = BigInt(1000000)
@@ -2078,6 +2060,103 @@ object Similarity {
       else v = u.map { case (i, x) => i -> (x * scale / mx) } // BigInt / truncates toward zero, like SQL div
     }
     dims.map(i => (i, v(i).toLong)).toDF("dim", "v_ppm")
+  }
+
+  /** The upper triangle (i ≤ j, diagonal included) of the exact Gram
+    * matrix Σ_v xf_v·xf_vᵀ of the ppm-quantized `embedding` vectors, as
+    * (i, j, g DECIMAL(38,0)) — the same numbers as the posexplode self-join
+    * `a.join(b, vec_id).filter(a.i <= b.i)` summing DECIMAL(38,0) casts of
+    * the BIGINT products, with none of its d(d+1)/2 rows per vector: each
+    * partition folds its vectors into one triangle ([[gramPartials]]), and
+    * the groupBy(i, j) sums at most d(d+1)/2 partials per partition. Like
+    * the join, a null vector adds nothing, a null slot adds nothing to its
+    * entries (an entry reached only through null slots sums to null), and
+    * ragged vectors add to the entries they reach.
+    */
+  def embeddingGram(embeddings: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.encoders.RowEncoder
+    import org.apache.spark.sql.types.{DecimalType, IntegerType, StructField, StructType}
+    val enc = RowEncoder.encoderFor(StructType(Seq(
+      StructField("i", IntegerType, nullable = false),
+      StructField("j", IntegerType, nullable = false),
+      StructField("p", DecimalType(38, 0)))))
+    embeddings.repartition(col("vec_id"))
+      .select(expr("transform(embedding, x -> " +
+        "CAST(floor(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,16)) * 1000000) AS BIGINT))")
+        .as("xf"))
+      .mapPartitions(gramPartials)(enc)
+      .groupBy(col("i"), col("j")).agg(sum(col("p")).as("g"))
+  }
+
+  /** One partition's Gram partials: a row (i, j, Σ xf_i·xf_j) for every
+    * entry i ≤ j that one of `rows`' `xf: array<bigint>` vectors reaches,
+    * entry (i, j) kept at j(j+1)/2 + i so vectors of any length share one
+    * packed triangle. Each product is an exact BIGINT (`multiplyExact`, as
+    * ANSI Spark multiplies); each entry sums in a Long and carries into a
+    * BigInteger just before the Long would overflow, so the partial is
+    * exact at any row count. An entry reached only through null slots is a
+    * null partial.
+    */
+  private[graft] def gramPartials(rows: Iterator[Row]): Iterator[Row] = {
+    import java.math.{BigDecimal => JBigDecimal, BigInteger}
+    var acc = new Array[Long](0)
+    var carry = new Array[BigInteger](0)
+    var valued = new Array[Boolean](0) // some non-null product landed here
+    var reached = new Array[Boolean](0)
+    var dims = 0
+    var xs = new Array[Long](0)
+    var present = new Array[Boolean](0)
+    rows.foreach { r =>
+      val v = if (r.isNullAt(0)) Seq.empty else r.getSeq[Any](0)
+      val n = v.length
+      if (n > dims) {
+        val size = n * (n + 1) / 2
+        acc = java.util.Arrays.copyOf(acc, size)
+        carry = java.util.Arrays.copyOf(carry, size)
+        valued = java.util.Arrays.copyOf(valued, size)
+        reached = java.util.Arrays.copyOf(reached, size)
+        xs = new Array[Long](n)
+        present = new Array[Boolean](n)
+        dims = n
+      }
+      var i = 0
+      v.foreach { x =>
+        present(i) = x != null
+        if (present(i)) xs(i) = x.asInstanceOf[Long]
+        i += 1
+      }
+      var j = 0
+      while (j < n) {
+        val base = j * (j + 1) / 2
+        i = 0
+        while (i <= j) {
+          val k = base + i
+          reached(k) = true
+          if (present(i) && present(j)) {
+            val p = Math.multiplyExact(xs(i), xs(j))
+            val a = acc(k)
+            val s = a + p
+            if (((a ^ s) & (p ^ s)) < 0) { // a + p overflows a Long
+              val c = carry(k)
+              carry(k) = if (c == null) BigInteger.valueOf(a) else c.add(BigInteger.valueOf(a))
+              acc(k) = p
+            } else acc(k) = s
+            valued(k) = true
+          }
+          i += 1
+        }
+        j += 1
+      }
+    }
+    Iterator.range(0, dims).flatMap(j => Iterator.range(0, j + 1).collect {
+      case i if reached(j * (j + 1) / 2 + i) =>
+        val k = j * (j + 1) / 2 + i
+        val g =
+          if (!valued(k)) null
+          else if (carry(k) == null) JBigDecimal.valueOf(acc(k))
+          else new JBigDecimal(carry(k).add(BigInteger.valueOf(acc(k))))
+        Row(i, j, g)
+    })
   }
 
   /** Margin-based bitext mining (Artetxe & Schwenk, "Margin-based Parallel

@@ -3,7 +3,6 @@ package graft.engine
 import java.nio.file.{FileVisitOption, Files, Paths}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -71,22 +70,30 @@ object Catalog {
     }
   }
 
+  // (file path, length, mtime) → the file's Parquet record count
+  private val footerCounts = TrieMap.empty[(String, Long, Long), Long]
+  private val FooterCountsCap = 100000
+
   /** Row count of `df`. A bare, unpartitioned Parquet table is counted in
     * this JVM from the row counts in its file footers, with no Spark job
     * (the reference likewise reports table sizes from statistics,
-    * `psql_database_helper.py:166-169`). Anything else — a filtered or
-    * derived plan, an in-memory relation, a partitioned table — is counted
-    * by `df.count()`.
+    * `psql_database_helper.py:166-169`). Each file's count is kept under
+    * its path, length and mtime as the DataFrame's file index listed them,
+    * so a repeated count opens no footer and a file rewritten in place is
+    * read anew. Anything else — a filtered or derived plan, an in-memory
+    * relation, a partitioned table — is counted by `df.count()`.
     */
   def rowCount(df: DataFrame): Long = df.queryExecution.analyzed match {
     case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
         if fs.fileFormat.isInstanceOf[ParquetFileFormat] && fs.partitionSchema.isEmpty =>
-      val conf = fs.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      lazy val conf = fs.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
         .sessionState.newHadoopConfWithOptions(fs.options)
-      fs.location.inputFiles.iterator.map { f =>
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(new java.net.URI(f)), conf))
-        try reader.getRecordCount finally reader.close()
+      if (footerCounts.size > FooterCountsCap) footerCounts.clear()
+      fs.location.listFiles(Nil, Nil).iterator.flatMap(_.files).map { f =>
+        footerCounts.getOrElseUpdate((f.getPath.toString, f.getLen, f.getModificationTime), {
+          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f.fileStatus, conf))
+          try reader.getRecordCount finally reader.close()
+        })
       }.sum
     case _ => df.count()
   }

@@ -40,7 +40,6 @@ object GraftExtensions {
     fn("sorted_pairs", classOf[SortedPairs])(e => SortedPairs(e(0))),
     fn("deletion_variants", classOf[DeletionVariants])(e => DeletionVariants(e(0))),
     fn("edit_within_1", classOf[EditWithin1])(e => EditWithin1(e(0), e(1))),
-    fn("tri_products", classOf[TriProducts])(e => TriProducts(e(0))),
     fn("simhash64", classOf[Simhash64])(e =>
       Simhash64(e(0), if (e.length > 1) e(1) else Literal(64))),
     fn("bitmap_distinct", classOf[NativeAggregates.BitmapDistinctCount])(e =>

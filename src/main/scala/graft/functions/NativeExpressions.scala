@@ -1073,71 +1073,6 @@ object NativeExpressions {
       copy(child = newChild)
   }
 
-  /** Upper-triangle products of one quantized vector in a single compiled
-    * pass — the per-row core of [[TriProducts]]: for every i ≤ j emits
-    * (i, j, xf(i)·xf(j)). `multiplyExact` mirrors ANSI Spark's overflow
-    * behavior on the BIGINT product the join formulation computed.
-    */
-  def triProductsJava(xs: ArrayData): ArrayData = {
-    val n = xs.numElements()
-    val a = new Array[Long](n)
-    var i = 0
-    while (i < n) { a(i) = xs.getLong(i); i += 1 }
-    val out = new Array[AnyRef](n * (n + 1) / 2)
-    var k = 0
-    i = 0
-    while (i < n) {
-      val xi = a(i)
-      var j = i
-      while (j < n) {
-        out(k) = org.apache.spark.sql.catalyst.InternalRow(
-          i, j, Math.multiplyExact(xi, a(j)))
-        k += 1
-        j += 1
-      }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** tri_products(xf: array<bigint>) → array<struct<i, j, p>>: the upper
-    * triangle (i ≤ j, diagonal included) of the outer product of a
-    * quantized coordinate vector with itself — the per-vector Gram
-    * contribution. `explode(tri_products(xf))` + groupBy(i, j) replaces
-    * the posexplode + co-partitioned self-join `a.join(b, vec_id, a.i <=
-    * b.i)` those Gram sweeps ran: the d(d+1)/2 pair rows come out of one
-    * generated loop instead of the join's sort/merge/row-build machinery,
-    * and the same partial aggregate consumes them inside the stage. NULL
-    * input → NULL (explode then emits nothing, like the join dropping the
-    * row).
-    */
-  case class TriProducts(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("i", IntegerType, nullable = false),
-        StructField("j", IntegerType, nullable = false),
-        StructField("p", LongType, nullable = false))),
-      containsNull = false)
-    override def prettyName: String = "tri_products"
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"tri_products expects array<bigint>, got $t")
-    }
-
-    override def nullSafeEval(input: Any): Any =
-      triProductsJava(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.NativeExpressions.triProductsJava($c);")
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
   /** True iff Levenshtein(a, b) ≤ 1, by the classic one-edit scan: strip
     * the longest common byte prefix and suffix (each re-aligned to a
     * code-point boundary — safe on valid UTF-8, where a position is a

@@ -1629,23 +1629,26 @@ object ExtensionQueries {
         t(s, dir, "events"), t(s, dir, "orders"), "user_id", "o_custkey")),
     // market-basket pair mining: parts bought together in one order, top
     // 25 by support with integer-basis-point lift (the co-purchase signal
-    // behind "frequently bought together"). Basket pairs come from the
-    // sorted_pairs generator over per-order part lists (fan-out bounded by
-    // basket size squared, identical rows to the former basket self-join
-    // at a fraction of its row-build cost), counts shuffle on the pair,
-    // the part-frequency side broadcasts.
+    // behind "frequently bought together"). One shuffle builds each order's
+    // part list, and the sorted_pairs generator pairs it (fan-out bounded
+    // by basket size squared; it skips repeated and null parts, so its
+    // rows are the oracle's basket self-join's). Part frequency counts the
+    // distinct (order, part) lines in one codegen aggregate: exploding the
+    // lists instead would merge them a second time for that consumer,
+    // which costs no less (A/B in STATUS) and is a repeated heavy fragment.
+    // Pair counts shuffle on the pair; the part-frequency side broadcasts.
     "basket_pairs_topk" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-      val pairs = li.groupBy(col("ok"))
-        .agg(collect_list(col("pk")).as("ids"))
+      val baskets = li.groupBy(col("l_orderkey"))
+        .agg(collect_list(col("l_partkey")).as("ids"))
+      val pairs = baskets
         .select(explode(expr("sorted_pairs(ids)")).as("p"))
         .select(col("p.id_a").as("part_a"), col("p.id_b").as("part_b"))
         .groupBy(col("part_a"), col("part_b")).agg(count(lit(1)).as("n_ab"))
-      val freq = li.groupBy(col("pk")).agg(count(lit(1)).as("n_one"))
-      val nOrders = li.select(col("ok")).distinct()
-        .agg(count(lit(1)).as("n_orders"))
+      val freq = li.select(col("l_orderkey"), col("l_partkey").as("pk")).distinct()
+        .groupBy(col("pk")).agg(count(lit(1)).as("n_one"))
+      // planned as a distinct over l_orderkey alone
+      val nOrders = baskets.agg(count(lit(1)).as("n_orders"))
       pairs
         .join(broadcast(freq.toDF("part_a", "n_a")), "part_a")
         .join(broadcast(freq.toDF("part_b", "n_b")), "part_b")

@@ -978,37 +978,70 @@ class AnalyticsSpec extends SparkSpecBase {
     assert(math.abs(got(0)) < 100000 && math.abs(got(2)) < 100000)
   }
 
-  test("tri_products gram equals the posexplode self-join gram") {
-    // the kernel path (what topComponentPower now runs)
-    val coords = emb.repartition(col("vec_id"))
-      .select(expr("transform(embedding, x -> " +
-        "CAST(floor(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,16)) * 1000000) AS BIGINT))")
-        .as("xf"))
-    val kernelGram = coords.select(explode(expr("tri_products(xf)")).as("t"))
-      .select(col("t.i").as("i"), col("t.j").as("j"),
-        col("t.p").cast("decimal(38,0)").as("p"))
-      .groupBy(col("i"), col("j")).agg(sum(col("p")).as("g"))
+  test("embeddingGram equals the posexplode self-join gram") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
     // the former join formulation, verbatim
-    val old = emb.repartition(col("vec_id"))
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "x")))
-      .select(col("vec_id"), col("i"),
-        expr("CAST(floor(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,16)) * 1000000) AS BIGINT)")
-          .as("xf"))
-    val joinGram = old.alias("a").join(old.alias("b"), Seq("vec_id"))
-      .filter(col("a.i") <= col("b.i"))
-      .select(col("a.i").as("i"), col("b.i").as("j"),
-        (col("a.xf") * col("b.xf")).cast("decimal(38,0)").as("p"))
-      .groupBy(col("i"), col("j")).agg(sum(col("p")).as("g"))
-    assert(kernelGram.count() > 0)
-    assert(kernelGram.exceptAll(joinGram).isEmpty &&
-      joinGram.exceptAll(kernelGram).isEmpty)
-    // degenerate inputs: empty and single-element vectors
-    import spark.implicits._
-    val tiny = Seq(Seq.empty[Long], Seq(7L)).toDF("xf")
-    val got = tiny.select(expr("tri_products(xf)").as("t")).collect()
-      .map(_.getSeq[org.apache.spark.sql.Row](0).map(r =>
-        (r.getInt(0), r.getInt(1), r.getLong(2))))
-    assert(got(0).isEmpty && got(1) == Seq((0, 0, 49L)))
+    def joinGram(emb: DataFrame): DataFrame = {
+      val old = emb.repartition(col("vec_id"))
+        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "x")))
+        .select(col("vec_id"), col("i"),
+          expr("CAST(floor(CAST(CAST(x AS DOUBLE) AS DECIMAL(28,16)) * 1000000) AS BIGINT)")
+            .as("xf"))
+      old.alias("a").join(old.alias("b"), Seq("vec_id"))
+        .filter(col("a.i") <= col("b.i"))
+        .select(col("a.i").as("i"), col("b.i").as("j"),
+          (col("a.xf") * col("b.xf")).cast("decimal(38,0)").as("p"))
+        .groupBy(col("i"), col("j")).agg(sum(col("p")).as("g"))
+    }
+    def entries(gram: DataFrame): Seq[(Int, Int, Option[BigInt])] =
+      gram.collect().toSeq.map(r => (r.getInt(0), r.getInt(1),
+        Option(r.getDecimal(2)).map(d => BigInt(d.toBigInteger)))).sorted
+    def sameAsJoin(emb: DataFrame): Seq[(Int, Int, Option[BigInt])] = {
+      val got = entries(Similarity.embeddingGram(emb))
+      assert(got == entries(joinGram(emb)))
+      got
+    }
+    assert(sameAsJoin(emb).nonEmpty)
+
+    val schema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    def frame(rows: (Long, Seq[java.lang.Float])*): DataFrame =
+      spark.createDataFrame(rows.map { case (id, v) => Row(id, v) }.asJava, schema)
+    def f(x: Float): java.lang.Float = x
+    // a null row, a null slot, a ragged vector whose last slot is null
+    // (entries (i, 4) are reached only through it: their sums are null)
+    val mixed = sameAsJoin(frame(
+      1L -> Seq(f(1.5f), f(-2.25f), f(0.5f)),
+      2L -> null,
+      3L -> Seq(f(0.75f), null, f(1f)),
+      4L -> Seq(f(1f), f(2f), f(3f), f(4f), null)))
+    val at = mixed.map(e => (e._1, e._2) -> e._3).toMap
+    assert(at((0, 0)).contains(BigInt("3812500000000"))) // (1.5² + 0.75² + 1²)·10¹²
+    assert(at((0, 1)).contains(BigInt("-1375000000000"))) // 1.5·-2.25 + 1·2
+    assert(at((3, 3)).contains(BigInt("16000000000000")))
+    assert((0 to 4).forall(i => at((i, 4)).isEmpty) && at.size == 15)
+    // a single-element vector, and an empty frame
+    assert(sameAsJoin(frame(7L -> Seq(f(0.5f)))) ==
+      Seq((0, 0, Some(BigInt("250000000000")))))
+    assert(sameAsJoin(frame()).isEmpty)
+    assert(Similarity.topComponentPower(frame()).isEmpty)
+    // sums past Long.MaxValue: 3000 quantizes to 3·10⁹, so every vector
+    // adds ±9·10¹⁸ to each entry; nine vectors overflow a Long in any
+    // partition holding two or more of them
+    val big = (1 to 9).map(i => i.toLong -> Seq(f(3000f), f(-3000f)))
+    assert(sameAsJoin(frame(big: _*)) == Seq(
+      (0, 0, Some(BigInt("81000000000000000000"))),
+      (0, 1, Some(BigInt("-81000000000000000000"))),
+      (1, 1, Some(BigInt("81000000000000000000")))))
+    // one partition's partials carry into BigInteger exactly
+    val partials = Similarity.gramPartials(
+      Iterator.fill(3)(Row(Seq(3000000000L, -3000000000L)))).toSeq
+    assert(partials.map(r => (r.getInt(0), r.getInt(1), BigInt(r.getDecimal(2).toBigInteger))) ==
+      Seq((0, 0, BigInt("27000000000000000000")),
+        (0, 1, BigInt("-27000000000000000000")),
+        (1, 1, BigInt("27000000000000000000"))))
   }
 
   test("bitext margin pairs match a full driver-side replica") {

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import graft.engine.Catalog
 import org.apache.spark.sql.functions.{col, lit, raise_error}
@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions.{col, lit, raise_error}
 /** Stored tables are read and counted from Parquet metadata: `rowCount`
   * agrees with `count()` on single- and multi-file tables and falls back to
   * it on anything derived; a repeated `read` and a `rowCount` run no Spark
-  * job; a rewritten table is read with its new schema. `save` writes its
+  * job; a rewritten table is read with its new schema and counted anew,
+  * also when a file is replaced under its old name. `save` writes its
   * tables together and rethrows a failed table's error after the others.
   */
 class CatalogSpec extends SparkSpecBase {
@@ -73,6 +74,31 @@ class CatalogSpec extends SparkSpecBase {
       assert(back.columns.toSeq == Seq("b", "c"))
       assert(back.schema("c").dataType == org.apache.spark.sql.types.StringType)
       assert(Catalog.rowCount(back) == 7L)
+    }
+  }
+
+  test("a table rewritten in place is counted anew") {
+    withTempDir { dir =>
+      // one file name, first holding 3 rows and then 11
+      def single(n: Long, at: String): Path = {
+        spark.range(n).coalesce(1).write.parquet(at)
+        Files.list(Paths.get(at)).iterator.asScala
+          .filter(_.getFileName.toString.endsWith(".parquet")).next()
+      }
+      val three = single(3, s"$dir/three")
+      val eleven = single(11, s"$dir/eleven")
+      val table = dir.resolve("t.parquet")
+      Files.createDirectories(table)
+      val file = table.resolve("part-0.parquet")
+      Files.copy(three, file)
+      assert(Catalog.rowCount(Catalog.read(spark, table.toString)) == 3L)
+      assert(Catalog.rowCount(Catalog.read(spark, table.toString)) == 3L)
+      Files.copy(eleven, file, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(file, java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(three).toMillis + 5000))
+      val back = Catalog.read(spark, table.toString)
+      assert(Catalog.rowCount(back) == 11L)
+      assert(back.count() == 11L)
     }
   }
 

@@ -197,10 +197,10 @@ class NativeExpressionsSpec extends SparkSpecBase {
     assert(e.getMessage.toLowerCase.contains("float"))
   }
 
-  test("GraftExtensions injects all 16 graft functions") {
+  test("GraftExtensions injects all 15 graft functions") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext) // must not throw
-    assert(GraftExtensions.functions.map(_._1).distinct.size == 16)
+    assert(GraftExtensions.functions.map(_._1).distinct.size == 15)
     val s2 = spark.newSession()
     assert(s2.sql("SELECT hamming('10', '11') AS h").head.getInt(0) == 1)
   }

@@ -50,6 +50,36 @@ class SegmentationSpec extends SparkSpecBase {
     assert(got((1L, 3L)) == ((1L, 1L * 3 * 10000 / (2 * 2))))
   }
 
+  test("basket pairs: the one-pass form equals the oracle's self-join at sf0.001 and on duplicate and null lines") {
+    // the oracle's SQL run in Spark: DuckDB's `//` is Spark's `div`
+    val oracle = SparkEntry.oracleSql("basket_pairs_topk")
+      .replace(" // ", " div ").replace("FROM lineitem", "FROM basket_lineitem")
+    def check(dir: String): Seq[Row] = {
+      spark.read.parquet(s"$dir/lineitem.parquet").createOrReplaceTempView("basket_lineitem")
+      try {
+        val want = spark.sql(oracle).collect().toSeq
+        val got = ExtensionQueries.queries("basket_pairs_topk")(spark, dir).collect().toSeq
+        assert(got == want)
+        got
+      } finally spark.catalog.dropTempView("basket_lineitem")
+    }
+    assert(check(sfDir).length == 25)
+    val liSchema = StructType(Seq(
+      StructField("l_orderkey", LongType), StructField("l_partkey", LongType)))
+    // order 1 lists part 2 twice, order 2 has a null part, order 3 only a
+    // null part (it still counts as an order): pairs (1,2) 2, (2,3) 2,
+    // (1,3) 1; part orders 1->2, 2->3, 3->2; N=4
+    val rows = Seq[(Long, java.lang.Long)]((1L, 1L), (1L, 2L), (1L, 2L), (1L, 3L),
+      (2L, 1L), (2L, 2L), (2L, null), (3L, null), (4L, 2L), (4L, 3L))
+      .map { case (o, p) => Row(o, p) }
+    val dir = java.nio.file.Files.createTempDirectory("graft_basket").toString
+    spark.createDataFrame(rows.asJava, liSchema)
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    assert(check(dir).map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))) ==
+      Seq((1L, 2L, 2L, 2L * 4 * 10000 / (2 * 3)), (2L, 3L, 2L, 2L * 4 * 10000 / (3 * 2)),
+        (1L, 3L, 1L, 1L * 4 * 10000 / (2 * 2))))
+  }
+
   test("supplier lead time: integer day diffs and exact percentiles") {
     val liSchema = StructType(Seq(
       StructField("l_suppkey", LongType), StructField("l_orderkey", LongType),

@@ -14,7 +14,7 @@ class SessionSpec extends SparkSpecBase {
   private val graftFunctions = Seq(
     "float_dot", "l2_sq", "l2_argmin_idx", "hamming", "first_chunk_within",
     "winnow_minima", "hilbert_pos", "md5_h1h2", "sorted_pairs",
-    "deletion_variants", "edit_within_1", "tri_products", "simhash64",
+    "deletion_variants", "edit_within_1", "simhash64",
     "bitmap_distinct", "graft_bloom_build", "graft_bloom_might_contain")
 
   test("a fresh newSession resolves every graft function without a register call") {
