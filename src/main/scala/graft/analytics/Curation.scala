@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.engine.Materialize
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -512,8 +513,7 @@ object Curation {
     */
   def curationFunnel(
       docs: DataFrame,
-      contamPatterns: Seq[String],
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
+      contamPatterns: Seq[String])
       : DataFrame = {
     def stat(name: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_docs"),
@@ -522,11 +522,11 @@ object Curation {
     val s0 = docs.select(col("doc_id"), col("n_chars"), col("text"))
     val contaminated = contamPatterns
       .map(p => instr(col("text"), lit(p)) > 0).reduce(_ || _)
-    val s1 = materialize(s0.filter(!contaminated))
+    val s1 = Materialize.local(s0.filter(!contaminated))
     val bands = s1.agg(
       expr("percentile(n_chars, 0.25)").as("p_lo"),
       expr("percentile(n_chars, 0.75)").as("p_hi"))
-    val s2 = materialize(
+    val s2 = Materialize.local(
       s1.crossJoin(broadcast(bands))
         .filter(col("n_chars") >= col("p_lo") && col("n_chars") <= col("p_hi"))
         .select(col("doc_id"), col("n_chars"), col("text")))
@@ -555,7 +555,7 @@ object Curation {
     * shuffle carries the 32-char fingerprint (never full text), the band
     * is a one-row broadcast, decontamination is map-only, the mix quota
     * table is |sources| rows broadcast, and packing folds per-source runs
-    * in one shuffle. Stages materialize through the `materialize` hook
+    * in one shuffle. Stages are cut through `Materialize.local`
     * between shufflesets exactly as [[curationFunnel]] does (a 100 TB run
     * checkpoints between stages anyway).
     */
@@ -563,8 +563,7 @@ object Curation {
       docs: DataFrame,
       contamPatterns: Seq[String],
       targetTotal: Long = 200L,
-      capacity: Long = 2048L,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
+      capacity: Long = 2048L)
       : DataFrame = {
     val s0 = docs.select(col("doc_id"), col("source"), col("n_chars"),
       col("text"))
@@ -572,7 +571,7 @@ object Curation {
     val keep = s0
       .select(col("doc_id"), fingerprint(col("text")).as("fp"))
       .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-    val s1 = materialize(
+    val s1 = Materialize.local(
       s0.join(keep.select(col("doc_id")), Seq("doc_id"), "left_semi"))
     // stage 2: quality gate — IQR length band on the deduped survivors
     val bands = s1.agg(
@@ -584,7 +583,7 @@ object Curation {
     // stage 3: decontaminate the quality survivors
     val contaminated = contamPatterns
       .map(p => instr(col("text"), lit(p)) > 0).reduce(_ || _)
-    val s3 = materialize(s2.filter(!contaminated))
+    val s3 = Materialize.local(s2.filter(!contaminated))
     // stage 4: sqrt-tempered source mix over the surviving distribution
     val picked = sourceMixSample(s3, targetTotal)
     val s4 = s3.join(picked.select(col("doc_id")), Seq("doc_id"), "left_semi")
@@ -603,26 +602,21 @@ object Curation {
     * "why was this dropped" table — and the actual drop is one filter over
     * this relation. Each input operator keeps its own at-scale shape; the
     * audit adds only doc_id-keyed joins (co-partitioned after the first).
-    * The `materialize` lineage-cut hook threads through to the iterative
-    * sub-operators (LSH bands, connected components) exactly as in `Dedup`
-    * — pass `Materialize.parquet(dir)` on a real cluster.
+    * The iterative sub-operators (LSH bands, connected components) cut
+    * their lineage exactly as in `Dedup`.
     */
-  def curationAudit(
-      docs: DataFrame,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+  def curationAudit(docs: DataFrame): DataFrame = {
     // ONE fingerprint scan feeds both the per-doc fp column and the group
     // representatives (materialized so the two consumers share it); the
     // grouping itself still goes through the standalone operator so the
     // audit's exact-dup verdict cannot drift from Dedup.fingerprintGroups
     // (CurationSpec pins the equality)
-    val fp = materialize(
+    val fp = Materialize.local(
       docs.select(col("doc_id"), fingerprint(col("text")).as("fp")))
     val keep = Dedup.fingerprintGroupsFromFps(fp)
       .select(col("fp").as("f"), col("keep_id").as("k"))
     val comp = Dedup.connectedComponents(
-        Dedup.lshCandidatePairs(docs, materialize = materialize)
-          .select(col("id_a"), col("id_b")),
-        materialize = graft.engine.Materialize.lazily(materialize))
+        Dedup.lshCandidatePairs(docs).select(col("id_a"), col("id_b")))
       .filter(col("component") =!= col("doc_id"))
       .select(col("doc_id"), lit(1).as("nd"))
     val bands = docs.agg(
@@ -649,11 +643,8 @@ object Curation {
     * mirrors, the contaminated split): same audit relations, one extra
     * source-keyed aggregate. |sources| output rows; reporting shape.
     */
-  def sourceCurationReport(
-      docs: DataFrame,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
-      : DataFrame =
-    curationAudit(docs, materialize)
+  def sourceCurationReport(docs: DataFrame): DataFrame =
+    curationAudit(docs)
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1343,13 +1334,11 @@ object Curation {
     * (the merge table IS the trained artifact — parameter-sized, like an
     * index head). Returns (step, pair, n).
     */
-  def bpeMerges(docs: DataFrame, nMerges: Int = 4,
-      // LAZY checkpoint: each step's argmax head() doubles as the
-      // materializing job for the previous step's vocabulary rewrite (2
-      // jobs/step -> 1), and the final step's rewrite — consumed by
-      // nothing — never computes at all
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.localLazy)
-      : DataFrame = {
+  def bpeMerges(docs: DataFrame, nMerges: Int = 4): DataFrame = {
+    // LAZY checkpoint: each step's argmax head() doubles as the
+    // materializing job for the previous step's vocabulary rewrite (2
+    // jobs/step -> 1), and the final step's rewrite — consumed by
+    // nothing — never computes at all
     val spark = docs.sparkSession
     // " h e l l o " — space-padded so every symbol occurrence, including
     // word edges, is delimited by spaces and replace cannot match inside a
@@ -1360,7 +1349,7 @@ object Curation {
         concat_ws(" ", expr(
           "transform(sequence(1, length(tk)), i -> substring(tk, i, 1))")),
         lit(" ")))
-    vocab = materialize(vocab)
+    vocab = Materialize.localLazy(vocab)
     val merges = Seq.newBuilder[(Int, String, Long)]
     for (step <- 1 to nMerges) {
       val top = vocab
@@ -1377,7 +1366,7 @@ object Curation {
         .head()
       val pair = top.getString(0)
       merges += ((step, pair, top.getLong(1)))
-      vocab = materialize(vocab.withColumn("repr",
+      vocab = Materialize.localLazy(vocab.withColumn("repr",
         replace(col("repr"), lit(s" $pair "),
           lit(" " + pair.replace(" ", "") + " "))))
     }
@@ -1800,14 +1789,12 @@ object Curation {
     * Σ_pairs (|a|+|b|) distinct grams, linear in the candidate volume
     * the LSH stage already bounded.
     */
-  def rougeOverlapPairs(docs: DataFrame, pairs: DataFrame,
-      materialize: DataFrame => DataFrame =
-        graft.engine.Materialize.local): DataFrame = {
+  def rougeOverlapPairs(docs: DataFrame, pairs: DataFrame): DataFrame = {
     // EAGER: each order's gram-count relation feeds the per-doc total
     // aggregate AND both pair-join sides; the join sides canonicalize
     // equal (AQE reuses one) but the total's pruning differs, so the
     // corpus shingle chain re-ran x2 per order (RepeatAudit) — cut once
-    def gramCounts(n: Int): DataFrame = materialize(docs
+    def gramCounts(n: Int): DataFrame = Materialize.local(docs
       .repartition(col("doc_id"))
       .select(col("doc_id"), tokens(col("text")).as("w"))
       .select(col("doc_id"), explode(wordShingles(col("w"), n)).as("g"))

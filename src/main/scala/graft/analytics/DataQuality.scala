@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.engine.Materialize
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -1012,18 +1013,15 @@ object DataQuality {
     * EAGER at construction: the value-domain rank relation and the
     * k-row per-cohort rank-sum relation each feed multiple consumers
     * (the tie aggregate; both sides of the pair self-join plus the
-    * global aggregate), so both are cut via `materialize` — measured
+    * global aggregate), so both are cut via `Materialize.local` — measured
     * 2.2× warm at sf1 (6.52 → 2.91 s, tasks 385 → 234) vs lazy, the
     * linkPredictionTopK class (small relations after a heavy chain,
     * where AQE exchange reuse does not cover the post-aggregate
     * window). Cutting the corpus-sized cv as well was measured 2×
-    * SLOWER (see inline note). Pass
-    * [[graft.engine.Materialize.none]] to stay lazy.
+    * SLOWER (see inline note).
     */
   def dunnPosthoc(df: DataFrame, cohortCol: String,
-      valueDollars: org.apache.spark.sql.Column,
-      materialize: DataFrame => DataFrame =
-        graft.engine.Materialize.local): DataFrame = {
+      valueDollars: org.apache.spark.sql.Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val d = "DECIMAL(38,0)"
     // cv stays LAZY although two eager jobs below consume it: cutting
@@ -1036,11 +1034,11 @@ object DataQuality {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // r2 (value-domain-bounded) is the shared root of the tie aggregate
     // and the per-cohort rank sums — one cut runs the rank window once
-    val r2 = materialize(cnt.withColumn("cumt", sum(col("t")).over(w))
+    val r2 = Materialize.local(cnt.withColumn("cumt", sum(col("t")).over(w))
       .select(col("x"), expr("2 * (cumt - t) + t + 1").as("r2"),
         expr(s"CAST(t AS $d) * t * t - t").as("tie")))
     val ties = r2.agg(sum(col("tie")).as("tie_cubic"))
-    val grp = materialize(
+    val grp = Materialize.local(
       cv.join(r2.select(col("x"), col("r2")), Seq("x"))
         .groupBy(col("cohort"))
         .agg(sum(col("c")).as("ni"),

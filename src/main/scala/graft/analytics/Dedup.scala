@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.engine.Materialize
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -193,26 +194,26 @@ object Dedup {
     * oracle).
     */
   def connectedComponents(
-      edges: DataFrame, maxRounds: Int = 100, checkEvery: Int = 4,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.localLazy): DataFrame = {
+      edges: DataFrame, maxRounds: Int = 100, checkEvery: Int = 4)
+      : DataFrame = {
     // undirected adjacency, self-loops so isolated endpoints keep a row
-    val adj = materialize(
+    val adj = Materialize.localLazy(
       edges.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
         .union(edges.select(col("id_a").as("src"), col("id_a").as("dst")))
         .union(edges.select(col("id_b").as("src"), col("id_b").as("dst")))
         .distinct())
-    var labels = materialize(adj.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("component")))
+    var labels = Materialize.localLazy(adj.select(col("src").as("id"))
+      .distinct().select(col("id"), col("id").as("component")))
     // fixpoint probe scalar: labels are monotone non-increasing per vertex
     // (the self-loop keeps each vertex's own label in its min), and the
     // vertex set is constant — so the EXACT label sum strictly decreases
     // until convergence. Comparing two scalars replaces the former
     // node-relation self-join + isEmpty probe per block: one cheap scan of
     // the just-checkpointed labels instead of an extra shuffle stage.
-    // With the LAZY default materializer the probe is also the
-    // materializing action — the checkpoint data persists inside the
-    // labelSum job, one job per block instead of checkpoint + probe
+    // With the LAZY cut the probe is also the materializing action — the
+    // checkpoint data persists inside the labelSum job, one job per block
+    // instead of checkpoint + probe
     // (measured: the per-key fixed cost of the ~100-job iterative keys is
     // driver job latency, not task work).
     // DECIMAL(38,0) keeps the sum exact for any realistic id space
@@ -229,7 +230,7 @@ object Dedup {
     var converged = false
     while (!converged) {
       var next = labels
-      // a few lazy rounds per materialize: cutting lineage every round
+      // a few lazy rounds per cut: cutting lineage every round
       // would pay an eager job per hop, while never cutting doubles the
       // analyzed-plan depth per round
       for (_ <- 1 to checkEvery) {
@@ -237,7 +238,7 @@ object Dedup {
           .groupBy(col("src")).agg(min(col("component")).as("component"))
           .select(col("src").as("id"), col("component"))
       }
-      labels = materialize(next)
+      labels = Materialize.localLazy(next)
       round += checkEvery
       val curSum = labelSum(labels)
       converged = curSum.compareTo(prevSum) == 0
@@ -289,21 +290,19 @@ object Dedup {
     * metric applied to a dedup clustering before trusting its
     * representatives. Nodes in no triangle are absent.
     */
-  def triangleCounts(
-      edges: DataFrame,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
-      : DataFrame = {
+  def triangleCounts(edges: DataFrame): DataFrame = {
     // EAGER: `e0` feeds the degree aggregate and the orientation join,
     // and `oriented` feeds THREE consumers (both wedge legs + the closing
     // edge) under different projections, so AQE's stage cache cannot
     // reuse them — RepeatAudit measured the distinct/degree chains
-    // executing x6 uncut. Both are cut through `materialize`.
-    val e0 = materialize(edges.select(col("id_a"), col("id_b")).distinct())
+    // executing x6 uncut. Both are cut through `Materialize.local`.
+    val e0 =
+      Materialize.local(edges.select(col("id_a"), col("id_b")).distinct())
     val deg = e0.select(explode(array(col("id_a"), col("id_b"))).as("vtx"))
       .groupBy("vtx").agg(count(lit(1)).as("d"))
     def ord(d: Column, id: Column): Column =
       struct(d.as("d"), id.as("id"))
-    val oriented = materialize(e0
+    val oriented = Materialize.local(e0
       .join(deg.select(col("vtx").as("id_a"), col("d").as("da")), "id_a")
       .join(deg.select(col("vtx").as("id_b"), col("d").as("db")), "id_b")
       .select(
@@ -335,16 +334,16 @@ object Dedup {
     * unpivot to thresholds-sized output.
     *
     * EAGER: the edge and degree relations each feed two consumers under
-    * different prunings (RepeatAudit class) — cut through `materialize`.
+    * different prunings (RepeatAudit class) — cut through
+    * `Materialize.local`.
     */
   def richClubCoefficients(
-      edges: DataFrame, thresholds: Seq[Int] = Seq(4, 8, 16, 32),
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
+      edges: DataFrame, thresholds: Seq[Int] = Seq(4, 8, 16, 32))
       : DataFrame = {
     require(thresholds.nonEmpty, "richClubCoefficients: need thresholds")
-    val e = materialize(edges.select(col("id_a"), col("id_b"))
+    val e = Materialize.local(edges.select(col("id_a"), col("id_b"))
       .filter(col("id_a") =!= col("id_b")).distinct())
-    val deg = materialize(
+    val deg = Materialize.local(
       e.select(explode(array(col("id_a"), col("id_b"))).as("u"))
         .groupBy(col("u")).agg(count(lit(1)).as("d")))
     val tagged = e
@@ -396,15 +395,14 @@ object Dedup {
     * tie-break.
     *
     * EAGER: construction runs Spark jobs (same lineage rule as
-    * [[bfsDepthFromHubs]]) — `sym`/`adj` are cut through `materialize`
+    * [[bfsDepthFromHubs]]) — `sym`/`adj` are cut through `Materialize.local`
     * and the adaptive cap is a driver `collect()` scalar, so merely
     * building the returned DataFrame executes the edge scan and degree
     * aggregate; failures surface at call time even if the result is
     * never consumed.
     */
   def linkPredictionTopK(
-      edges: DataFrame, degCap: Int = 64, k: Int = 20,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
+      edges: DataFrame, degCap: Int = 64, k: Int = 20)
       : DataFrame = {
     val e0 = edges.select(col("id_a"), col("id_b"))
       .filter(col("id_a") =!= col("id_b")).distinct()
@@ -412,7 +410,7 @@ object Dedup {
     // below feeds FOUR consumers (cdeg, both wedge legs, the anti-join)
     // — materialize each once or Spark re-runs the scan→distinct→join
     // chain per consumer (measured 1741 tasks at sf1 without the cuts)
-    val sym = materialize(
+    val sym = Materialize.local(
       e0.select(col("id_a").as("u"), col("id_b").as("v"))
         .union(e0.select(col("id_b").as("u"), col("id_a").as("v"))))
     val deg0 = sym.groupBy(col("u")).agg(count(lit(1)).as("d"))
@@ -426,7 +424,7 @@ object Dedup {
     val deg = deg0.filter(col("d") <= cap)
     // capped subgraph: BOTH endpoints under the cap; degrees re-derived
     // within it so the Jaccard denominator matches the graph being scored
-    val adj = materialize(
+    val adj = Materialize.local(
       sym.join(deg.select(col("u")), Seq("u"), "left_semi")
         .join(deg.select(col("u").as("v")), Seq("v"), "left_semi")
         .select(col("u"), col("v")))
@@ -460,30 +458,28 @@ object Dedup {
     *
     * Per iteration: one src-keyed join (node-sized rank relation against
     * the edge relation) and one dst aggregate — the standard two-shuffle
-    * distributed PageRank; the hook cuts lineage between iterations. The
+    * distributed PageRank; a lazy cut separates iterations. The
     * node count is the one driver scalar (a count, like the index
     * staleness signature — not data).
     */
-  def pageRankFixedPoint(edges: DataFrame, iters: Int = 3,
-      // LAZY checkpoints: each cut materializes inside its first consumer
-      // (dir in the node-count job, each iteration inside the next one's
-      // stages) — the consumption chain is strictly sequential, so nothing
-      // double-computes and the loop sheds one dedicated job per cut
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.localLazy)
-      : DataFrame = {
+  def pageRankFixedPoint(edges: DataFrame, iters: Int = 3): DataFrame = {
+    // LAZY checkpoints: each cut materializes inside its first consumer
+    // (dir in the node-count job, each iteration inside the next one's
+    // stages) — the consumption chain is strictly sequential, so nothing
+    // double-computes and the loop sheds one dedicated job per cut
     val S = 1000000000000L
     val e0 = edges.select(col("id_a"), col("id_b"))
       .filter(col("id_a") =!= col("id_b")).distinct()
-    val dir = materialize(
+    val dir = Materialize.localLazy(
       e0.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(e0.select(col("id_b").as("src"), col("id_a").as("dst"))))
     val deg = dir.groupBy("src").agg(count(lit(1)).as("deg"))
-    val withDeg = materialize(dir.join(deg, "src"))
+    val withDeg = Materialize.localLazy(dir.join(deg, "src"))
     val n = deg.count()
     val base = (3L * S) / (20L * n)
     var ranks = deg.select(col("src").as("node"), lit(S / n).as("pr"))
     for (_ <- 1 to iters) {
-      ranks = materialize(
+      ranks = Materialize.localLazy(
         withDeg.join(ranks, withDeg("src") === ranks("node"))
           .select(col("dst"), expr("(pr * 17) div (20 * deg)").as("c"))
           .groupBy("dst").agg(sum(col("c")).as("in_mass"))
@@ -511,12 +507,11 @@ object Dedup {
     * `scale * E`, BIGINT-safe past 10^12 edges at the default scale; a
     * larger graph raises `scale` into DECIMAL territory — lower it first.
     */
-  def hitsFixedPoint(edges: DataFrame, iters: Int = 2, scale: Long = 1000000L,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
+  def hitsFixedPoint(edges: DataFrame, iters: Int = 2, scale: Long = 1000000L)
       : DataFrame = {
-    val e = materialize(edges.select(col("src"), col("dst"))
+    val e = Materialize.local(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct())
-    val nodes = materialize(e.select(col("src").as("node"))
+    val nodes = Materialize.local(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
     var hub = nodes.select(col("node"), lit(scale).as("h"))
     var auth: DataFrame = null
@@ -524,12 +519,12 @@ object Dedup {
       val rawA = e.join(hub.select(col("node").as("src"), col("h")), "src")
         .groupBy(col("dst").as("node")).agg(sum(col("h")).as("ra"))
       val totA = rawA.agg(sum(col("ra")).as("t"))
-      auth = materialize(rawA.crossJoin(broadcast(totA))
+      auth = Materialize.local(rawA.crossJoin(broadcast(totA))
         .select(col("node"), expr(s"($scale * ra) div t").as("a")))
       val rawH = e.join(auth.select(col("node").as("dst"), col("a")), "dst")
         .groupBy(col("src").as("node")).agg(sum(col("a")).as("rh"))
       val totH = rawH.agg(sum(col("rh")).as("t"))
-      hub = materialize(rawH.crossJoin(broadcast(totH))
+      hub = Materialize.local(rawH.crossJoin(broadcast(totH))
         .select(col("node"), expr(s"($scale * rh) div t").as("h")))
     }
     nodes.join(hub, Seq("node"), "left").join(auth, Seq("node"), "left")
@@ -538,12 +533,11 @@ object Dedup {
   }
 
   def connectedComponentsStar(
-      edges: DataFrame, maxRounds: Int = 60,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.localLazy): DataFrame = {
-    val verts = materialize(
+      edges: DataFrame, maxRounds: Int = 60): DataFrame = {
+    val verts = Materialize.localLazy(
       edges.select(col("id_a").as("id"))
         .union(edges.select(col("id_b").as("id"))).distinct())
-    var e = materialize(
+    var e = Materialize.localLazy(
       edges.select(least(col("id_a"), col("id_b")).as("a"),
           greatest(col("id_a"), col("id_b")).as("b"))
         .filter(col("a") =!= col("b")).distinct())
@@ -568,7 +562,7 @@ object Dedup {
       // links itself and all its smaller neighbors to their minimum
       val sm = ls.groupBy(col("b")).agg(min(col("a")).as("m"))
       val withM = ls.join(sm, Seq("b"))
-      val next = materialize(
+      val next = Materialize.localLazy(
         withM.select(col("m").as("a"), col("b"))
           .union(withM.select(col("m").as("a"), col("a").as("b")))
           .filter(col("a") =!= col("b")).distinct())
@@ -652,9 +646,7 @@ object Dedup {
     * Output: every vertex still alive after `rounds` peels with its degree
     * in the surviving subgraph (vertices whose edges all died are absent).
     */
-  def kCorePeel(edges: DataFrame, k: Int, rounds: Int,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
-      : DataFrame = {
+  def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     // canonicalize orientation BEFORE distinct: an input carrying both
     // (a,b) and (b,a) would otherwise survive dedup twice and double
     // every degree, inflating k-core membership (no precondition on
@@ -663,13 +655,13 @@ object Dedup {
       least(col("id_a"), col("id_b")).as("id_a"),
       greatest(col("id_a"), col("id_b")).as("id_b"))
       .filter(col("id_a") =!= col("id_b")).distinct()
-    var dir = materialize(
+    var dir = Materialize.local(
       e0.select(col("id_a").as("node"), col("id_b").as("nb"))
         .union(e0.select(col("id_b").as("node"), col("id_a").as("nb"))))
     for (_ <- 1 to rounds) {
       val keep = dir.groupBy(col("node")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("node"))
-      dir = materialize(
+      dir = Materialize.local(
         dir.join(keep, Seq("node"), "left_semi")
           .join(keep.select(col("node").as("nb")), Seq("nb"), "left_semi"))
     }
@@ -698,17 +690,15 @@ object Dedup {
     * node-keyed argmax (max-count reduce + filter-join + min-label reduce,
     * all on the node key — one exchange, no window), so the round is the
     * same two-shuffle class as [[pageRankFixedPoint]] with no
-    * single-partition stage anywhere; the hook cuts lineage between rounds.
+    * single-partition stage anywhere; a lazy cut separates rounds.
     *
     * Output: (node, label) after `rounds` sweeps — nodes sharing a label
     * form one community.
     */
-  def labelPropagation(edges: DataFrame, rounds: Int = 3,
-      // LAZY checkpoints — same sequential-consumer fusion as
-      // [[pageRankFixedPoint]]: round 1's join materializes dir, each
-      // round's label relation materializes inside the next round
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.localLazy)
-      : DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
+    // LAZY checkpoints — same sequential-consumer fusion as
+    // [[pageRankFixedPoint]]: round 1's join materializes dir, each
+    // round's label relation materializes inside the next round
     val e0 = edges.select(
       least(col("id_a"), col("id_b")).as("id_a"),
       greatest(col("id_a"), col("id_b")).as("id_b"))
@@ -718,7 +708,7 @@ object Dedup {
     val nodes = sym.select(col("node")).distinct()
     // self-loop per node = the self-vote (one ballot for the node's own
     // current label alongside its neighbors')
-    val dir = materialize(
+    val dir = Materialize.localLazy(
       sym.union(nodes.select(col("node"), col("node").as("nb"))))
     var lab = nodes.select(col("node"), col("node").as("label"))
     for (_ <- 1 to rounds) {
@@ -731,7 +721,7 @@ object Dedup {
       // reduce are all keyed on the node, so Catalyst plans one exchange
       // for the whole round tail (no single-partition stage anywhere)
       val cmax = cnt.groupBy(col("node")).agg(max(col("c")).as("cmax"))
-      lab = materialize(
+      lab = Materialize.localLazy(
         cnt.join(cmax, Seq("node"))
           .filter(col("c") === col("cmax"))
           .groupBy(col("node")).agg(min(col("label")).as("label")))
@@ -768,10 +758,9 @@ object Dedup {
   private def dfCappedShingles(
       docs: DataFrame,
       n: Int,
-      dfCap: Int,
-      materialize: DataFrame => DataFrame): DataFrame = {
+      dfCap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    materialize(shingles(docs, n)
+    Materialize.local(shingles(docs, n)
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("s"))))
       .filter(col("df") <= dfCap))
   }
@@ -793,13 +782,10 @@ object Dedup {
       docs: DataFrame,
       n: Int = 3,
       thresholdDen: Int = 5,
-      dfCap: Int = 100,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      dfCap: Int = 100): DataFrame = {
     // the shingle relation feeds the df filter, the size aggregate and both
     // join sides — materialize once instead of recomputing explode+distinct
-    // (pass Materialize.parquet(dir) on a real cluster: localCheckpoint
-    // blocks don't survive executor loss)
-    allPairsScored(docs, n, dfCap, materialize)
+    allPairsScored(docs, n, dfCap)
       .filter(lit(thresholdDen) * col("n_common") >= col("n_union"))
   }
 
@@ -834,9 +820,8 @@ object Dedup {
   private def allPairsScored(
       docs: DataFrame,
       n: Int,
-      dfCap: Int,
-      materialize: DataFrame => DataFrame): DataFrame = {
-    val shAll = materialize(shingles(docs, n))
+      dfCap: Int): DataFrame = {
+    val shAll = Materialize.local(shingles(docs, n))
     // df filter shuffles on the same key as the self-join below, so the
     // capped relation arrives pre-clustered for it
     val rare = shAll.groupBy(col("s"))
@@ -868,10 +853,9 @@ object Dedup {
       docs: DataFrame,
       n: Int = 3,
       dfCap: Int = 20,
-      thresholds: Seq[(Int, Int)] = Seq((1, 5), (1, 2), (4, 5)),
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      thresholds: Seq[(Int, Int)] = Seq((1, 5), (1, 2), (4, 5))): DataFrame = {
     require(thresholds.nonEmpty, "jaccardThresholdCurve: need thresholds")
-    val scored = allPairsScored(docs, n, dfCap, materialize)
+    val scored = allPairsScored(docs, n, dfCap)
     val aggs = thresholds.zipWithIndex.map { case ((num, den), i) =>
       sum(when(lit(den) * col("n_common") >= lit(num) * col("n_union"), 1L)
         .otherwise(0L)).as(s"c$i")
@@ -916,15 +900,14 @@ object Dedup {
       n: Int = 3,
       thresholdNum: Int = 4,
       thresholdDen: Int = 5,
-      dfCap: Int = 100,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      dfCap: Int = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(thresholdNum >= 1 && thresholdDen >= thresholdNum,
       s"prefixFilterJaccardPairs: need 0 < num/den <= 1, " +
         s"got $thresholdNum/$thresholdDen")
     // ONE materialized relation serves the adaptive verify's three actions
     // (sizes count, candidate-doc count, main job) — see dfCappedShingles
-    val sh = dfCappedShingles(docs, n, dfCap, materialize)
+    val sh = dfCappedShingles(docs, n, dfCap)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     prefixFilterJaccardFromShingles(sh, sizes, thresholdNum, thresholdDen)
   }
@@ -1065,13 +1048,12 @@ object Dedup {
       thresholdNum: Int = 9,
       thresholdDen: Int = 10,
       dfCap: Int = 100,
-      minShingles: Int = 8,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      minShingles: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // one materialization serves the prefix build, both candidate-doc
     // scans, the sizes aggregate and the verify self-join (the adaptive
     // counts below are extra actions over this relation)
-    val shDf = dfCappedShingles(docs, n, dfCap, materialize)
+    val shDf = dfCappedShingles(docs, n, dfCap)
     val sh = shDf.select(col("doc_id"), col("s"))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     // ONE-SIDED prefix filter, complete for containment: for a qualifying
@@ -1343,11 +1325,10 @@ object Dedup {
       n: Int = 3,
       thresholdDen: Int = 5,
       dfCap: Int = 100,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local,
       thresholdNum: Int = 1): DataFrame = {
-    val cand = lshCandidatePairs(docs, numHashes, rowsPerBand, n, materialize)
+    val cand = lshCandidatePairs(docs, numHashes, rowsPerBand, n)
       .select(col("id_a"), col("id_b"))
-    val shD = dfCappedShingles(docs, n, dfCap, materialize)
+    val shD = dfCappedShingles(docs, n, dfCap)
     val sh = shD.select(col("doc_id"), col("s"))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     exactJaccardOnPairs(cand, sh, sizes, thresholdNum, thresholdDen)
@@ -1379,15 +1360,14 @@ object Dedup {
       n: Int = 3,
       thresholdNum: Int = 4,
       thresholdDen: Int = 5,
-      dfCap: Int = 100,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      dfCap: Int = 100): DataFrame = {
     // ONE shingle scan serves truth, candidate verify, and sizes — at
     // corpus scale you never tokenize three times for one evaluation
-    val sh = dfCappedShingles(docs, n, dfCap, materialize)
+    val sh = dfCappedShingles(docs, n, dfCap)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val truth = prefixFilterJaccardFromShingles(
       sh, sizes, thresholdNum, thresholdDen)
-    val cand = lshCandidatePairs(docs, numHashes, rowsPerBand, n, materialize)
+    val cand = lshCandidatePairs(docs, numHashes, rowsPerBand, n)
       .select(col("id_a"), col("id_b")).distinct()
     val found = exactJaccardOnPairs(cand,
       sh.select(col("doc_id"), col("s")), sizes, thresholdNum, thresholdDen)
@@ -1486,10 +1466,9 @@ object Dedup {
       docs: DataFrame,
       numHashes: Int = 8,
       rowsPerBand: Int = 4,
-      n: Int = 3,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      n: Int = 3): DataFrame = {
     // both sides of the bucket self-join share this pipeline — materialize once
-    val bands = materialize(lshBands(docs, numHashes, rowsPerBand, n))
+    val bands = Materialize.local(lshBands(docs, numHashes, rowsPerBand, n))
     val a = bands.toDF("id_a", "band", "bkey")
     val b = bands.toDF("id_b", "band", "bkey")
     a.join(b, Seq("band", "bkey")).filter(col("id_a") < col("id_b"))
@@ -1557,10 +1536,9 @@ object Dedup {
       newDocs: DataFrame,
       numHashes: Int = 8,
       rowsPerBand: Int = 4,
-      n: Int = 3,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
+      n: Int = 3)
       : DataFrame = {
-    val index = materialize(lshBands(oldDocs, numHashes, rowsPerBand, n))
+    val index = Materialize.local(lshBands(oldDocs, numHashes, rowsPerBand, n))
     val delta = lshBands(newDocs, numHashes, rowsPerBand, n)
     delta.toDF("new_id", "band", "bkey")
       .join(index.toDF("old_id", "band", "bkey"), Seq("band", "bkey"))
@@ -1641,13 +1619,12 @@ object Dedup {
   def simhashNearDupPairs(
       docs: DataFrame,
       maxDist: Int = 3,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local,
       sigBits: Int = 64): DataFrame = {
     require(maxDist >= 0 && maxDist < sigBits,
       s"simhashNearDupPairs: maxDist must be in [0, $sigBits), got $maxDist")
     require(sigBits <= 128,
       s"simhashNearDupPairs: sigBits must be <= 128, got $sigBits")
-    val sigs = materialize(simhashSignatures(docs, sigBits))
+    val sigs = Materialize.local(simhashSignatures(docs, sigBits))
 
     // ---- pack the bit string into right-aligned 64-bit words, once per
     // doc: word w covers global bits [wordStart(w), wordStart(w)+wb) ----
@@ -1780,11 +1757,10 @@ object Dedup {
     */
   def simhashNearDupPairsStrSig(
       docs: DataFrame,
-      maxDist: Int = 3,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      maxDist: Int = 3): DataFrame = {
     require(maxDist >= 0 && maxDist < 64,
       s"simhashNearDupPairsStrSig: maxDist must be in [0, 64), got $maxDist")
-    val sigs = materialize(simhashSignatures(docs))
+    val sigs = Materialize.local(simhashSignatures(docs))
     val m = maxDist + 1 // pigeonhole: ≤ maxDist flips leave one chunk exact
     val bits = 64
     // chunk split mirrors NativeExpressions.firstChunkJava: near-equal
@@ -1927,15 +1903,14 @@ object Dedup {
     * broadcast.
     */
   def communityModularity(
-      edges: DataFrame, membership: DataFrame,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
+      edges: DataFrame, membership: DataFrame)
       : DataFrame = {
     // membership: (node, community). Tag both endpoints. EAGER: `e`
     // feeds the tag join and the node census, `tagged` feeds the edge
     // count, the degree-mass explode, and the within-community filter —
     // all under different prunings (RepeatAudit: x3 uncut) — cut each.
-    val e = materialize(edges.select(col("id_a"), col("id_b")).distinct())
-    val tagged = materialize(e
+    val e = Materialize.local(edges.select(col("id_a"), col("id_b")).distinct())
+    val tagged = Materialize.local(e
       .join(membership.select(col("node").as("id_a"), col("community").as("ca")),
         Seq("id_a"))
       .join(membership.select(col("node").as("id_b"), col("community").as("cb")),
@@ -2023,13 +1998,10 @@ object Dedup {
     * [[linkPredictionTopK]] degCap argument exists for the same hub
     * reason).
     */
-  def degreeAssortativity(
-      edges: DataFrame,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
-      : DataFrame = {
+  def degreeAssortativity(edges: DataFrame): DataFrame = {
     // EAGER: the double cover feeds the degree aggregate and both tag
     // joins under different prunings (RepeatAudit: x4 uncut) — cut once
-    val dc = materialize {
+    val dc = Materialize.local {
       val e = edges.select(col("id_a"), col("id_b")).distinct()
       e.select(col("id_a").as("u"), col("id_b").as("v"))
         .union(e.select(col("id_b").as("u"), col("id_a").as("v")))

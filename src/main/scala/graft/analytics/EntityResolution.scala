@@ -116,15 +116,11 @@ object EntityResolution {
     * 2.3 s (the cut pays checkpoint writes and blocks scan pruning).
     * This is the opposite of [[Dedup.linkPredictionTopK]], whose reused
     * relations are consumed under DIFFERENT prunings and so never match
-    * in the stage cache. `materialize` therefore defaults to `none`;
-    * pass [[graft.engine.Materialize.local]]/`parquet` only on engines
-    * with exchange reuse disabled.
+    * in the stage cache. So neither relation is cut.
     */
   def blockingEval(
       records: DataFrame, idCol: String, nameCol: String,
-      strategies: Seq[(String, org.apache.spark.sql.Column)],
-      materialize: DataFrame => DataFrame =
-        graft.engine.Materialize.none): DataFrame = {
+      strategies: Seq[(String, org.apache.spark.sql.Column)]): DataFrame = {
     require(strategies.nonEmpty, "blockingEval: need strategies")
     val base = records.select(col(idCol).as("rid"), col(nameCol).as("name"))
     // truth: dist <= 1 pairs with NO blocking (distinct deletion variants
@@ -139,19 +135,19 @@ object EntityResolution {
     // (verify-free kind join) was A/B'd and REJECTED: it forfeits variant
     // distinctness, and names with digit runs ("Customer#000000042") then
     // multiply the per-variant join groups quadratically.
-    // The repartition on the join key BEFORE the cut matters: a compact
-    // source (one parquet row group) leaves the explode on 1 partition,
-    // and a 1-partition checkpoint serializes the whole self-join
-    // (measured 3x wall at sf0.1); verify runs BEFORE distinct so the
-    // pair dedup shuffles only the surviving matches.
-    val v = materialize(base.select(col("rid"), col("name"),
+    // The repartition on the join key matters: a compact source (one
+    // parquet row group) leaves the explode on 1 partition, and the cut
+    // form measured above serialized the whole self-join on it (3x wall
+    // at sf0.1); verify runs BEFORE distinct so the pair dedup shuffles
+    // only the surviving matches.
+    val v = base.select(col("rid"), col("name"),
       explode(expr("deletion_variants(name)")).as("vv"))
-      .repartition(col("vv")))
-    val truth = materialize(v.alias("a").join(v.alias("b"),
+      .repartition(col("vv"))
+    val truth = v.alias("a").join(v.alias("b"),
         col("a.vv") === col("b.vv") && col("a.rid") < col("b.rid"))
       .filter(expr("edit_within_1(a.name, b.name)"))
       .select(col("a.rid").as("id_a"), col("b.rid").as("id_b"))
-      .distinct())
+      .distinct()
     val perStrategy = strategies.map { case (sname, keyCol) =>
       val keyed = records.select(col(idCol).as("rid"), keyCol.as("bk"))
       val stats = keyed.groupBy(col("bk")).agg(count(lit(1)).as("sz"))

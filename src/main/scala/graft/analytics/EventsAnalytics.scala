@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.engine.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1439,14 +1440,9 @@ object EventsAnalytics {
     * sf1 (warm 0.67 → 2.10 s, tasks 37 → 73: AQE's exchange reuse
     * already shares the identical groupBy exchange across the three
     * consumers, and a localCheckpoint adds the write plus loses scan
-    * pruning — the er_blocking_eval lesson). `materialize` therefore
-    * defaults to [[graft.engine.Materialize.none]]; pass
-    * [[graft.engine.Materialize.parquet]] only on a cluster where a
-    * lost executor must not recompute the events scan.
+    * pruning — the er_blocking_eval lesson). So it stays lazy.
     */
-  def mannKendallDailyTrend(events0: DataFrame,
-      materialize: DataFrame => DataFrame =
-        graft.engine.Materialize.none): DataFrame = {
+  def mannKendallDailyTrend(events0: DataFrame): DataFrame = {
     val dayNs = 86400L * 1000000000L
     val e = EventTime.toNanos(events0)
       .select(col("event_type"), expr(s"ts div $dayNs").as("day"))
@@ -1454,10 +1450,10 @@ object EventsAnalytics {
       .agg(count(lit(1)).as("c"))
     val rng = cnt.groupBy(col("event_type"))
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
-    val dense = materialize(rng
+    val dense = rng
       .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("day"))
       .join(cnt, Seq("event_type", "day"), "left")
-      .na.fill(0L, Seq("c")))
+      .na.fill(0L, Seq("c"))
     val s = dense.select(col("event_type"), col("day").as("da"), col("c").as("ca"))
       .join(dense.select(col("event_type"), col("day").as("db"),
         col("c").as("cb")), Seq("event_type"))
@@ -2266,14 +2262,12 @@ object EventsAnalytics {
     *
     * EAGER at construction: the zero-filled day relation feeds five
     * consumers (two rank windows, two tie aggregates, the moment join),
-    * so the corpus-sized scan behind it is cut once via `materialize`
-    * (sf1 measured 5.5× warm lazy → cut; the RepeatAudit class). Pass
-    * [[graft.engine.Materialize.none]] to stay lazy.
+    * so the corpus-sized scan behind it is cut once via
+    * `Materialize.local` (sf1 measured 5.5× warm lazy → cut; the
+    * RepeatAudit class).
     */
   def spearmanDailyCorr(events0: DataFrame, typeA: String = "click",
-      typeB: String = "purchase",
-      materialize: DataFrame => DataFrame =
-        graft.engine.Materialize.local): DataFrame = {
+      typeB: String = "purchase"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val d = "DECIMAL(38,0)"
     val dayNs = 86400L * 1000000000L
@@ -2285,7 +2279,7 @@ object EventsAnalytics {
     val cnt = e.groupBy(col("day"))
       .agg(sum(when(col("event_type") === typeA, 1L).otherwise(0L)).as("x"),
         sum(when(col("event_type") === typeB, 1L).otherwise(0L)).as("y"))
-    val days = materialize(
+    val days = Materialize.local(
       grid.join(cnt, Seq("day"), "left").na.fill(0L, Seq("x", "y")))
     def rank2(v: String): DataFrame = {
       val byV = days.groupBy(col(v)).agg(count(lit(1)).as("t"))

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -24,12 +24,6 @@ import org.apache.spark.sql.types._
   *     JNI/library decoder swaps in without touching the plumbing.
   */
 object Multimodal {
-
-  /** Canonical asset schema: id + opaque payload + declared kind. */
-  val assetSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = true)))
 
   /** Extracted-metadata schema appended by the decoder. */
   val metaSchema: StructType = StructType(Seq(
@@ -1093,7 +1087,4 @@ object Multimodal {
   def sampleFrameOffsets(assets: DataFrame, nFrames: Int): DataFrame =
     assets.select(col("asset_id"),
       explode(sequence(lit(0), lit(nFrames - 1))).as("frame_idx"))
-
-  def loadAssets(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(assetSchema).parquet(path)
 }

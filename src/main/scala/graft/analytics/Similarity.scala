@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.engine.Catalog
+import graft.engine.{Catalog, Materialize}
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -353,14 +353,12 @@ object Similarity {
       nCells: Int = 16,
       nProbe: Int = 4,
       iters: Int = 3,
-      trainMod: Int = 1,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      trainMod: Int = 1): DataFrame = {
     val spread = embeddings.repartition(col("vec_id"))
     // 16 rows consumed by two assignment passes — cut the 3-iteration
-    // window/agg lineage once (pass Materialize.parquet(dir) on a real
-    // cluster, exactly as in Dedup)
+    // window/agg lineage once
     val centroids =
-      materialize(kMeansCentroids(spread, nCells, iters, trainMod))
+      Materialize.local(kMeansCentroids(spread, nCells, iters, trainMod))
 
     // index: each vector in exactly its nearest cell
     val indexed = assignCells(spread, centroids, 1)
@@ -397,12 +395,11 @@ object Similarity {
       nCells: Int = 16,
       iters: Int = 2,
       trainMod: Int = 4,
-      perCell: Int = 10,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
+      perCell: Int = 10)
       : DataFrame = {
     val spread = embeddings.repartition(col("vec_id"))
     val centroids =
-      materialize(kMeansCentroids(spread, nCells, iters, trainMod))
+      Materialize.local(kMeansCentroids(spread, nCells, iters, trainMod))
     val assigned = assignCells(spread, centroids, 1)
       .select(col("cell_id"), col("vec_id"))
     graft.plans.TopKPerKey.topKPerKey(
@@ -441,8 +438,7 @@ object Similarity {
       ksub: Int = 16,
       iters: Int = 2,
       shortK: Int = 50,
-      trainMod: Int = 1,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      trainMod: Int = 1): DataFrame = {
     val spread = embeddings.repartition(col("vec_id"))
     val q = embeddings.filter(col("vec_id") === queryId)
 
@@ -461,7 +457,7 @@ object Similarity {
 
     // codebooks consumed by the encode pass and the distance tables — cut
     // the Lloyd lineage once
-    val codebooks = materialize(
+    val codebooks = Materialize.local(
       kMeansCentroids(stacked, ksub, iters, trainMod, groupCols = Seq("sub")))
 
     val codes = assignCells(stacked, codebooks, 1, groupCols = Seq("sub"))
@@ -564,8 +560,7 @@ object Similarity {
       m: Int = 4,
       subDim: Int = 16,
       shortK: Int = 50,
-      trainMod: Int = 1,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      trainMod: Int = 1): DataFrame = {
     val spread = embeddings.repartition(col("vec_id"))
     val q = embeddings.filter(col("vec_id") === queryId)
 
@@ -580,7 +575,7 @@ object Similarity {
         slice(col("embedding"), s * subDim + 1, subDim)): _*))
         .as(Seq("p", "embedding")))
       .select(col("vec_id"), (col("p") - 1).as("sub"), col("embedding"))
-    val trained = materialize(
+    val trained = Materialize.local(
       kMeansCentroids(stackAll(spread), nCells, iters, trainMod,
         groupCols = Seq("sub")))
     val coarse = trained.filter(col("sub") === -1).drop("sub")
@@ -669,8 +664,7 @@ object Similarity {
       nCells: Int = -1,
       nProbe: Int = 2,
       iters: Int = 2,
-      trainMod: Int = 4,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      trainMod: Int = 4): DataFrame = {
     val spread = embeddings.repartition(col("vec_id"))
     // nCells < 0 (default) turns the documented FAISS dial automatically:
     // 2^max(4, bitlength(n/4096)) — cells grow ∝ corpus so per-cell
@@ -688,7 +682,7 @@ object Similarity {
         1 << math.min(12, math.max(4, bl))
       }
     val centroids =
-      materialize(kMeansCentroids(spread, cells, iters, trainMod))
+      Materialize.local(kMeansCentroids(spread, cells, iters, trainMod))
     val indexed = assignCells(spread, centroids, 1)
       .withColumn("nrm", sqrt(expr("float_dot(embedding, embedding)")))
       .select(col("cell_id"), col("vec_id").as("nbr_id"),
@@ -735,8 +729,7 @@ object Similarity {
       ksub: Int = 16,
       pqIters: Int = 2,
       pqTrainMod: Int = 4,
-      shortK: Int = 50,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      shortK: Int = 50): DataFrame = {
     val spread = embeddings.repartition(col("vec_id"))
     val q = embeddings.filter(col("vec_id") === queryId)
     val residCol = expr(
@@ -744,16 +737,17 @@ object Similarity {
 
     // coarse quantizer + full-corpus residuals
     val coarse =
-      materialize(kMeansCentroids(spread, nCells, coarseIters, coarseTrainMod))
+      Materialize.local(
+        kMeansCentroids(spread, nCells, coarseIters, coarseTrainMod))
     val af = assignCells(spread, coarse, 1)
-    val resid = materialize(af.join(broadcast(coarse), Seq("cell_id"))
+    val resid = Materialize.local(af.join(broadcast(coarse), Seq("cell_id"))
       .select(col("vec_id"), col("cell_id"), residCol.as("embedding")))
 
     def stackSub(df: DataFrame): DataFrame = df.select(col("vec_id"),
       posexplode(array((0 until m).map(s =>
         slice(col("embedding"), s * subDim + 1, subDim)): _*))
         .as(Seq("sub", "embedding")))
-    val codebooks = materialize(
+    val codebooks = Materialize.local(
       kMeansCentroids(stackSub(resid.select(col("vec_id"), col("embedding"))),
         ksub, pqIters, pqTrainMod, groupCols = Seq("sub")))
 
@@ -830,8 +824,7 @@ object Similarity {
       nCells: Int = -1,
       nProbe: Int = 4,
       iters: Int = 2,
-      trainMod: Int = 4,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      trainMod: Int = 4): DataFrame = {
     val spread = embeddings.repartition(col("vec_id"))
     // defaults < 0 adapt both dials to the corpus: queryMod = max(100,
     // n/500) caps the sampled query set at ~500, so the brute-force truth
@@ -873,7 +866,7 @@ object Similarity {
 
     // approximate: the IVF cell cut, probes computed for the queries only
     val centroids =
-      materialize(kMeansCentroids(spread, cells, iters, trainMod))
+      Materialize.local(kMeansCentroids(spread, cells, iters, trainMod))
     val indexed = assignCells(spread, centroids, 1)
       .withColumn("nrm", sqrt(expr("float_dot(embedding, embedding)")))
       .select(col("cell_id"), col("vec_id").as("nbr"),
@@ -911,8 +904,7 @@ object Similarity {
       nCells: Int = -1,
       probes: Seq[Int] = Seq(1, 2, 4),
       iters: Int = 2,
-      trainMod: Int = 4,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      trainMod: Int = 4): DataFrame = {
     require(probes.nonEmpty, "annRecallCurveIvf: need at least one probe width")
     val spread = embeddings.repartition(col("vec_id"))
     // same adaptive dials as annRecallIvf: ~500-query truth (linear) and
@@ -938,7 +930,7 @@ object Similarity {
           pairs.withColumn("neg_sim", -col("sim")),
           Seq("qid"), Seq("neg_sim", "nbr"), k)
         .select(col("qid"), col("nbr"))
-    val exactTop = materialize(topPerQuery(spread
+    val exactTop = Materialize.local(topPerQuery(spread
       .withColumn("nrm", sqrt(expr("float_dot(embedding, embedding)")))
       .crossJoin(qSide)
       .filter(col("vec_id") =!= col("qid"))
@@ -946,8 +938,8 @@ object Similarity {
         round(expr("float_dot(embedding, q_emb)") / (col("nrm") * col("qn")), 6)
           .as("sim"))))
     val centroids =
-      materialize(kMeansCentroids(spread, cells, iters, trainMod))
-    val indexed = materialize(assignCells(spread, centroids, 1)
+      Materialize.local(kMeansCentroids(spread, cells, iters, trainMod))
+    val indexed = Materialize.local(assignCells(spread, centroids, 1)
       .withColumn("nrm", sqrt(expr("float_dot(embedding, embedding)")))
       .select(col("cell_id"), col("vec_id").as("nbr"),
         col("embedding").as("n_emb"), col("nrm")))
@@ -984,9 +976,8 @@ object Similarity {
       batch: DataFrame,
       nCells: Int = 16,
       iters: Int = 2,
-      trainMod: Int = 4,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
-    val centroids = materialize(kMeansCentroids(
+      trainMod: Int = 4): DataFrame = {
+    val centroids = Materialize.local(kMeansCentroids(
       existing.repartition(col("vec_id")), nCells, iters, trainMod))
     assignCells(batch.repartition(col("vec_id")), centroids, 1)
       .select(col("vec_id"), col("cell_id"))
@@ -1040,8 +1031,7 @@ object Similarity {
       iters: Int = 2,
       m: Int = 4,
       subDim: Int = 16,
-      trainMod: Int = 1,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): Unit = {
+      trainMod: Int = 1): Unit = {
     val spark = embeddings.sparkSession
     // Build into a sibling temp dir, then swap it in with directory
     // renames: a concurrent reader in another process sees either the old
@@ -1054,7 +1044,7 @@ object Similarity {
         slice(col("embedding"), s * subDim + 1, subDim)): _*))
         .as(Seq("p", "embedding")))
       .select(col("vec_id"), (col("p") - 1).as("sub"), col("embedding"))
-    val trained = materialize(
+    val trained = Materialize.local(
       kMeansCentroids(stackAll(spread), nCells, iters, trainMod,
         groupCols = Seq("sub")))
     trained.write.mode("overwrite").parquet(s"$tmpDir/codebooks.parquet")
@@ -1062,10 +1052,10 @@ object Similarity {
     val coarse = codebooks.filter(col("sub") === -1).drop("sub")
     val pq = codebooks.filter(col("sub") =!= -1)
     // consumed by BOTH index writes (codes, vectors) — cut once
-    val cells = materialize(assignCells(spread, coarse, 1)
+    val cells = Materialize.local(assignCells(spread, coarse, 1)
       .select(col("vec_id"), col("cell_id")))
-    val codes = materialize(assignCells(stackSubDf(spread, m, subDim), pq, 1,
-        groupCols = Seq("sub"))
+    val codes = Materialize.local(
+      assignCells(stackSubDf(spread, m, subDim), pq, 1, groupCols = Seq("sub"))
       .select(col("vec_id"), col("sub"), col("cell_id").as("code")))
     // repartition on cell_id before partitionBy: each cell directory gets
     // ONE compact file instead of one per write task (~32× fewer files —
@@ -1181,8 +1171,7 @@ object Similarity {
       iters: Int = 2,
       m: Int = 4,
       subDim: Int = 16,
-      trainMod: Int = 1,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): Boolean = {
+      trainMod: Int = 1): Boolean = {
     if (verifiedIndexDirs.contains(indexDir)) return false
     val spark = embeddings.sparkSession
     val sig = corpusSignature(embeddings).collect()(0)
@@ -1205,8 +1194,7 @@ object Similarity {
             64 - java.lang.Long.numberOfLeadingZeros(math.max(n / 4096, 1L))
           1 << math.min(12, math.max(4, bl))
         }
-      ivfPqIndexBuild(embeddings, indexDir, cells, iters, m, subDim,
-        trainMod, materialize)
+      ivfPqIndexBuild(embeddings, indexDir, cells, iters, m, subDim, trainMod)
     }
     // the head read and the index-relation opens (partition discovery on
     // the cell-partitioned dirs) ride the build/staleness pass, so the
@@ -1739,8 +1727,7 @@ object Similarity {
       nCells: Int = -1,
       iters: Int = 2,
       trainMod: Int = 4,
-      minSim: Double = 0.30,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      minSim: Double = 0.30): DataFrame = {
     val spread = embeddings.repartition(col("vec_id"))
     // nCells < 0 (default) = the adaptive FAISS-nlist rule shared with
     // knnJoinIvf / the index build: 2^max(4, bitlength(n/4096)) — the
@@ -1759,10 +1746,11 @@ object Similarity {
           64 - java.lang.Long.numberOfLeadingZeros(math.max(n / 4096, 1L))
         1 << math.min(12, math.max(4, bl))
       }
-    val centroids = materialize(kMeansCentroids(spread, cells, iters, trainMod))
+    val centroids =
+      Materialize.local(kMeansCentroids(spread, cells, iters, trainMod))
     // assignment feeds both sides of the pair join — cut the Lloyd lineage
     // once and compute each row's norm a single time
-    val assigned = materialize(assignCells(spread, centroids, 1)
+    val assigned = Materialize.local(assignCells(spread, centroids, 1)
       .withColumn("nrm", sqrt(expr("float_dot(embedding, embedding)"))))
     val a = assigned.select(col("cell_id"), col("vec_id").as("id_a"),
       col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
@@ -1773,9 +1761,7 @@ object Similarity {
         round(expr("float_dot(emb_a, emb_b)") / (col("nrm_a") * col("nrm_b")), 6)
           .as("sim"))
       .filter(col("sim") >= minSim)
-    val drop = Dedup.connectedComponents(
-        pairs.select(col("id_a"), col("id_b")),
-        materialize = graft.engine.Materialize.lazily(materialize))
+    val drop = Dedup.connectedComponents(pairs.select(col("id_a"), col("id_b")))
       .filter(col("component") =!= col("doc_id"))
       .select(col("doc_id").as("vec_id"))
     embeddings.join(drop, Seq("vec_id"), "left_anti")
@@ -1823,13 +1809,10 @@ object Similarity {
       subCells: Int = 16,
       iters: Int = 2,
       trainMod: Int = 4,
-      minSim: Double = 0.30,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      minSim: Double = 0.30): DataFrame = {
     val pairs = semDedupHierLeafPairs(embeddings, topCells, maxCellPop,
-      subCells, iters, trainMod, minSim, materialize)
-    val drop = Dedup.connectedComponents(
-        pairs.select(col("id_a"), col("id_b")),
-        materialize = graft.engine.Materialize.lazily(materialize))
+      subCells, iters, trainMod, minSim)
+    val drop = Dedup.connectedComponents(pairs.select(col("id_a"), col("id_b")))
       .filter(col("component") =!= col("doc_id"))
       .select(col("doc_id").as("vec_id"))
     embeddings.join(drop, Seq("vec_id"), "left_anti")
@@ -1849,10 +1832,9 @@ object Similarity {
       subCells: Int,
       iters: Int,
       trainMod: Int,
-      minSim: Double,
-      materialize: DataFrame => DataFrame): DataFrame = {
+      minSim: Double): DataFrame = {
     val leaf = semDedupHierLeaves(embeddings, topCells, maxCellPop,
-      subCells, iters, trainMod, materialize)
+      subCells, iters, trainMod)
     val a = leaf.select(col("cell_id"), col("sub_id"), col("vec_id").as("id_a"),
       col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
     val b = leaf.select(col("cell_id"), col("sub_id"), col("vec_id").as("id_b"),
@@ -1879,8 +1861,7 @@ object Similarity {
       maxCellPop: Long,
       subCells: Int,
       iters: Int,
-      trainMod: Int,
-      materialize: DataFrame => DataFrame): DataFrame = {
+      trainMod: Int): DataFrame = {
     val spread = embeddings.repartition(col("vec_id"))
     val cells =
       if (topCells > 0) topCells
@@ -1890,8 +1871,8 @@ object Similarity {
           64 - java.lang.Long.numberOfLeadingZeros(math.max(n / 4096, 1L))
         1 << math.min(12, math.max(4, bl))
       }
-    val top = materialize(kMeansCentroids(spread, cells, iters, trainMod))
-    val a1 = materialize(assignCells(spread, top, 1))
+    val top = Materialize.local(kMeansCentroids(spread, cells, iters, trainMod))
+    val a1 = Materialize.local(assignCells(spread, top, 1))
     // oversized parents: a <= nCells-row aggregate, broadcast back
     val big = a1.groupBy(col("cell_id")).agg(count(lit(1)).as("pop"))
       .filter(col("pop") > maxCellPop)
@@ -1909,13 +1890,13 @@ object Similarity {
       .filter(col("rn") <= subCells)
       .select(col("g"), col("vec_id").as("cell_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("c_emb"))
-    val subC = materialize(lloydIterate(subTrain, seeds, iters, Seq("g")))
+    val subC = Materialize.local(lloydIterate(subTrain, seeds, iters, Seq("g")))
     // members of split cells re-assigned to their parent's sub-quantizer;
     // a parent with no training vectors has no sub-centroids (inner join
     // drops its members) -> those keep sub_id = -1 like unsplit cells
     val sub = assignCells(bigMembers, subC, 1, Seq("g"))
       .select(col("vec_id"), col("cell_id").as("sub_id"))
-    materialize(a1.join(sub, Seq("vec_id"), "left")
+    Materialize.local(a1.join(sub, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell_id"),
         coalesce(col("sub_id"), lit(-1L)).as("sub_id"), col("embedding"))
       .withColumn("nrm", sqrt(expr("float_dot(embedding, embedding)"))))
@@ -1932,8 +1913,7 @@ object Similarity {
   def semDedupKeepFromIndex(
       embeddings: DataFrame,
       indexDir: String,
-      minSim: Double = 0.30,
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local): DataFrame = {
+      minSim: Double = 0.30): DataFrame = {
     // the cell-partitioned inverted lists land as one small file per cell
     // directory; coalesce the scan to ~one task per cell so this key does
     // not schedule a hundred-odd tiny tasks for a KiB-per-cell read (no
@@ -1951,9 +1931,7 @@ object Similarity {
         round(expr("float_dot(emb_a, emb_b)") / (col("nrm_a") * col("nrm_b")), 6)
           .as("sim"))
       .filter(col("sim") >= minSim)
-    val drop = Dedup.connectedComponents(
-        pairs.select(col("id_a"), col("id_b")),
-        materialize = graft.engine.Materialize.lazily(materialize))
+    val drop = Dedup.connectedComponents(pairs.select(col("id_a"), col("id_b")))
       .filter(col("component") =!= col("doc_id"))
       .select(col("doc_id").as("vec_id"))
     embeddings.join(drop, Seq("vec_id"), "left_anti")
@@ -2318,8 +2296,7 @@ object Similarity {
     */
   def matryoshkaRecallCurve(
       emb: DataFrame, queryIds: Seq[Long] = Seq(0L, 50L, 100L, 150L, 200L),
-      k: Int = 10, widths: Seq[Int] = Seq(4, 8, 16, 32),
-      materialize: DataFrame => DataFrame = graft.engine.Materialize.local)
+      k: Int = 10, widths: Seq[Int] = Seq(4, 8, 16, 32))
       : DataFrame = {
     require(widths.nonEmpty, "matryoshkaRecallCurve: widths must be non-empty")
     val queries = emb.filter(col("vec_id").isInCollection(queryIds))
@@ -2327,7 +2304,7 @@ object Similarity {
     // spread before the crossJoin (see matryoshkaRecallEval): the pinned
     // pair relation inherits this partitioning, so all |widths|+1 heap
     // passes run parallel partials instead of one task each
-    val pairs = materialize(emb.repartition(col("vec_id"))
+    val pairs = Materialize.local(emb.repartition(col("vec_id"))
       .crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), col("embedding"), col("q_emb")))

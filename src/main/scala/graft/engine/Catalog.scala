@@ -19,9 +19,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Catalog {
 
-  def schemaName(table: String): Option[String] =
-    if (table.contains('.')) Some(table.split('.').head) else None
-
   def tableName(table: String): String = {
     val split = table.split('.')
     if (split.length > 1) split(1) else split(0)
@@ -114,68 +111,6 @@ object Catalog {
   def load(spark: SparkSession, dir: String, tables: Seq[String]): Map[String, DataFrame] =
     tables.map(t => t -> read(spark, s"$dir/${tableName(t)}.parquet")).toMap
 
-  /** Load/save a single table in any Spark DataSource format — the
-    * source/sink abstraction matching the reference's pluggable database
-    * helpers (/root/reference/db_connect.py:10-36 chooses postgres vs mysql
-    * by a `db_type` string the same way `format` does here). CSV and JSON
-    * carry no schema in the files, so writers emit a header (CSV) and
-    * readers accept an explicit schema or infer.
-    */
-  def loadTable(
-      spark: SparkSession,
-      path: String,
-      format: String = "parquet",
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val base = spark.read.format(format)
-    val withSchema = schema.map(base.schema).getOrElse(base)
-    format match {
-      case "csv" =>
-        val r = withSchema.option("header", "true")
-        (if (schema.isEmpty) r.option("inferSchema", "true") else r).load(path)
-      case _ => withSchema.load(path)
-    }
-  }
-
-  def saveTable(df: DataFrame, path: String, format: String = "parquet"): Unit = {
-    val w = df.write.mode("overwrite").format(format)
-    (if (format == "csv") w.option("header", "true") else w).save(path)
-  }
-
-  /** Load a table over JDBC — the analogue of the reference's live-database
-    * source (/root/reference/db_connect.py:29-36 builds a connection from
-    * url/user/password the same way `props` does here). `table` may be a
-    * bare/qualified table name or a full `(SELECT …) alias` pushdown query —
-    * both are what Spark's `dbtable` accepts.
-    *
-    * At scale, pass `partitionColumn`/`lowerBound`/`upperBound`/
-    * `numPartitions` in `props` so the read issues parallel range-bounded
-    * queries instead of one single-connection scan.
-    */
-  def loadJdbc(
-      spark: SparkSession,
-      url: String,
-      table: String,
-      props: Map[String, String] = Map.empty): DataFrame =
-    props.foldLeft(spark.read.format("jdbc")
-      .option("url", url).option("dbtable", table)) {
-      case (r, (k, v)) => r.option(k, v)
-    }.load()
-
-  /** Write a table over JDBC (overwrite = the reference's teardown+create,
-    * /root/reference/psql_database_creator.py:56-67). Writes happen one
-    * INSERT batch per partition in parallel; `props` may carry
-    * `batchsize`/`isolationLevel`/`truncate` tuning.
-    */
-  def saveJdbc(
-      df: DataFrame,
-      url: String,
-      table: String,
-      props: Map[String, String] = Map.empty): Unit =
-    props.foldLeft(df.write.mode("overwrite").format("jdbc")
-      .option("url", url).option("dbtable", table)) {
-      case (w, (k, v)) => w.option(k, v)
-    }.save()
-
   /** Materialize an output catalog, one Parquet directory per table —
     * the destination-database replacement (overwrite mode = the reference's
     * teardown+create, /root/reference/psql_database_creator.py:56-67).
@@ -196,29 +131,4 @@ object Catalog {
       })
     }
   }
-
-  /** Write a table hive-partitioned by the given columns — the layout that
-    * turns predicates on those columns into directory pruning (the scan
-    * never opens non-matching files). The right layout for low-cardinality
-    * filter columns (date, type, language) at 100 TB.
-    */
-  def savePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  /** Write a table bucketed (and sorted) by its join key into the session
-    * catalog. Two tables bucketed the same way join with NO shuffle on
-    * either side — the co-located-join layout that matters at 100 TB, where
-    * re-shuffling the fact table per query is the dominant cost.
-    */
-  def saveBucketed(
-      df: DataFrame,
-      table: String,
-      bucketCols: Seq[String],
-      nBuckets: Int): Unit =
-    df.write
-      .mode("overwrite")
-      .format("parquet")
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(table)
 }

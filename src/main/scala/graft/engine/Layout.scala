@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * layout is what makes scans cheap: a table clustered on a space-filling
   * curve over its two hottest filter dimensions gives every file a tight
   * min/max envelope in BOTH dimensions, so two-sided predicates prune to a
-  * small file subset (the Delta/Iceberg OPTIMIZE ZORDER idea, expressed as
-  * plain Spark `repartitionByRange` + `sortWithinPartitions`).
+  * small file subset (the Delta/Iceberg OPTIMIZE ZORDER idea). Here: the
+  * curve keys and the evaluations that measure what they buy.
   */
 object Layout {
 
@@ -22,27 +22,6 @@ object Layout {
         .bitwiseOR(
           shiftleft(shiftrightunsigned(b, i).bitwiseAND(lit(1L)), 2 * i + 1))
     }.reduce(_ bitwiseOR _)
-
-  /** Cluster `df` on the Z-curve over two dimension expressions (each
-    * bucketized to `bits` bits by the caller): range-partition by the
-    * z-value, sort within partitions. Each output partition (= file on
-    * write) then covers a compact z-range, i.e. a tight rectangle in
-    * (dimA, dimB) space — the property the `LayoutSpec` asserts. One range
-    * shuffle, the same cost class as any global sort, paid once at write
-    * time to make every later two-sided scan prune.
-    */
-  def zorderBy(
-      df: DataFrame,
-      dimA: Column,
-      dimB: Column,
-      bits: Int = 16,
-      numPartitions: Int = 0): DataFrame = {
-    val withZ = df.withColumn("z", zValue(dimA, dimB, bits))
-    val ranged =
-      if (numPartitions > 0) withZ.repartitionByRange(numPartitions, col("z"))
-      else withZ.repartitionByRange(col("z"))
-    ranged.sortWithinPartitions(col("z"))
-  }
 
   /** Hilbert-curve index of a 2-D point (the xy2d walk of the classic
     * iterative algorithm): unlike the Z-curve, the Hilbert curve never

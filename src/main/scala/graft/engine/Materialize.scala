@@ -1,27 +1,21 @@
 package graft.engine
 
-import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.DataFrame
 
-/** Materialization strategies for lineage cuts inside iterative/multi-consumer
-  * plans (the Subsetter's phase mutations, Dedup's shared shingle/band
-  * relations). The reference materializes into real destination tables at
-  * every step (/root/reference/subset.py:117,147,202); on Spark the
-  * equivalent is a pluggable `DataFrame => DataFrame` hook so the same
-  * operator code runs with:
-  *
-  *   - [[local]] — `localCheckpoint()`: executor-local blocks, fastest, but
-  *     NOT reliable on a real cluster (a lost executor makes the cut lineage
-  *     unrecoverable). The right default for local/bench runs.
-  *   - [[parquet]] — write-then-read a Parquet snapshot: survives executor
-  *     loss, the 100 TB-cluster choice (same durability class as Spark's
-  *     reliable `checkpoint()`, but columnar, compressed, and readable by
-  *     anything else).
-  *   - [[none]] — identity, for plans short enough to stay lazy.
+/** The one place that decides how a lineage cut is made. Iterative and
+  * multi-consumer plans (the Subsetter's phase mutations, Dedup's shared
+  * shingle/band relations, the ANN index builds) cut their lineage through
+  * one of the two calls below and take no strategy argument. The reference
+  * materializes into real destination tables at every step
+  * (`subset.py:117,147,202`); here both cuts are executor-local
+  * checkpoints, the right choice for single-JVM runs but NOT reliable on a
+  * real cluster (a lost executor makes the cut lineage unrecoverable). On
+  * a cluster, this object is the one line to change: make the cut a
+  * reliable checkpoint or an intermediate Parquet write.
   */
 object Materialize {
 
-  /** Executor-local checkpoint — fast, non-reliable (single-JVM default). */
+  /** Executor-local checkpoint, computed eagerly in a dedicated job. */
   val local: DataFrame => DataFrame = _.localCheckpoint()
 
   /** Executor-local checkpoint, LAZY: the logical plan is cut at this
@@ -29,34 +23,8 @@ object Materialize {
     * the data materializes inside the CALLER'S next action instead of a
     * dedicated eager job. The iterative-loop fusion primitive: a
     * fixpoint's convergence probe (label sum, edge count) doubles as the
-    * materializing job, one job per round instead of two. Same
-    * non-reliability class as [[local]] — pass [[parquet]] on a real
-    * cluster.
+    * materializing job, one job per round instead of two. Use it only where
+    * consumption is proved sequential.
     */
   val localLazy: DataFrame => DataFrame = _.localCheckpoint(eager = false)
-
-  /** No-op: keep the plan lazy. */
-  val none: DataFrame => DataFrame = identity
-
-  /** The lazy twin of a forwarded strategy where one exists: [[local]] →
-    * [[localLazy]] (callers that PROVED their consumption is sequential
-    * fuse the materializing job into the next action); anything else —
-    * [[parquet]], [[none]], a custom hook — passes through unchanged,
-    * keeping the cluster-durability contract of an explicitly chosen
-    * materializer.
-    */
-  def lazily(m: DataFrame => DataFrame): DataFrame => DataFrame =
-    if (m eq local) localLazy else m
-
-  private val counter = new AtomicLong(0)
-
-  /** Reliable cluster materializer: snapshot to `$dir/mat_<n>` and read it
-    * back. Each call gets a fresh subdirectory so one hook instance can cut
-    * many stages of a run.
-    */
-  def parquet(dir: String): DataFrame => DataFrame = { df =>
-    val path = s"$dir/mat_${counter.getAndIncrement()}"
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
-  }
 }

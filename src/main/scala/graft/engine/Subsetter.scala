@@ -22,14 +22,12 @@ import org.apache.spark.sql.functions._
   *   - each phase mutation is cut with `localCheckpoint` to stop the
   *     iterative union loop from building exponential lineage — the moral
   *     equivalent of the reference materializing into real destination
-  *     tables at every step (/root/reference/subset.py:117,147,202). On a
-  *     real cluster, swap `materialize` for a reliable checkpoint or an
-  *     intermediate Parquet write.
+  *     tables at every step (the reference's `subset.py:117,147,202`). The
+  *     kind of cut is decided in [[Materialize]].
   */
 final class Subsetter(
     config: SubsetConfig,
     source: Map[String, DataFrame],
-    materialize: DataFrame => DataFrame = Subsetter.defaultMaterialize,
     materializeThreshold: Long = 50000L) {
 
   // Checkpoint only tables whose *source* is large (stored tables are
@@ -41,7 +39,7 @@ final class Subsetter(
 
   private def cut(table: String, df: DataFrame): DataFrame =
     if (sourceCounts.getOrElse(table, Long.MaxValue) >= materializeThreshold)
-      materialize(df)
+      Materialize.local(df)
     else df
 
   private val allTables: Seq[String] =
@@ -185,11 +183,4 @@ final class Subsetter(
         (if (f.column.exists(columns.contains)) Seq(f.condition) else Nil)
     }
   }
-}
-
-object Subsetter {
-  /** Cut lineage + materialize once per phase mutation (SURVEY.md §4.4).
-    * Single-JVM default; pass [[Materialize.parquet]] on a real cluster.
-    */
-  def defaultMaterialize(df: DataFrame): DataFrame = Materialize.local(df)
 }

@@ -168,7 +168,4 @@ final class UnionFind {
       else { roots(yr) = xr; ranks(xr) += 1 }
     }
   }
-
-  def componentsCount: Int =
-    roots.indices.count(i => roots(i) == i)
 }

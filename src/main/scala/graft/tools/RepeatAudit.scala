@@ -160,19 +160,42 @@ object RepeatAudit {
     out.toSeq
   }
 
-  /** Self-test: the r14 `link_prediction_topk` bug shape (lineage cuts
-    * disabled) MUST produce heavy duplicate stages; the shipped (cut)
-    * version MUST NOT.
+  /** The r14 `link_prediction_topk` bug shape with no lineage cut: the
+    * scan → distinct → union → semi-join chain `adj` feeds four consumers
+    * under different prunings (the degree aggregate, both wedge legs and
+    * the anti-join), so AQE's stage cache cannot share it and each
+    * consumer re-runs the chain.
+    */
+  private def uncutWedges(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val e0 = edges.filter(col("id_a") =!= col("id_b")).distinct()
+    val sym = e0.select(col("id_a").as("u"), col("id_b").as("v"))
+      .union(e0.select(col("id_b").as("u"), col("id_a").as("v")))
+    val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("d"))
+      .filter(col("d") <= 64)
+    val adj = sym.join(deg.select(col("u")), Seq("u"), "left_semi")
+      .join(deg.select(col("u").as("v")), Seq("v"), "left_semi")
+    val cdeg = adj.groupBy(col("u")).agg(count(lit(1)).as("d"))
+    adj.select(col("u"), col("v").as("b"))
+      .join(adj.select(col("u"), col("v").as("c")), Seq("u"))
+      .filter(col("b") < col("c"))
+      .groupBy(col("b"), col("c")).agg(count(lit(1)).as("cn"))
+      .join(adj.select(col("u").as("b"), col("v").as("c")), Seq("b", "c"),
+        "left_anti")
+      .join(cdeg.select(col("u").as("b"), col("d").as("db")), Seq("b"))
+  }
+
+  /** Self-test: the uncut r14 shape ([[uncutWedges]]) MUST produce heavy
+    * duplicate stages; the shipped (cut) `linkPredictionTopK` MUST NOT.
     */
   def selfTest(spark: SparkSession, dir: String): Unit = {
     val edges = spark.read.parquet(s"$dir/documents.parquet")
       .selectExpr("doc_id % 97 AS id_a", "(doc_id * 7) % 97 AS id_b")
-    val uncut = graft.analytics.Dedup.linkPredictionTopK(
-      edges, materialize = graft.engine.Materialize.none)
+    val uncut = uncutWedges(edges)
     uncut.collect()
     val uncutHeavy = duplicateStageGroups(uncut).filter(_._3)
     require(uncutHeavy.nonEmpty,
-      "RepeatAudit self-test FAILED: uncut linkPredictionTopK not flagged")
+      "RepeatAudit self-test FAILED: uncut wedge plan not flagged")
     val cut = graft.analytics.Dedup.linkPredictionTopK(edges)
     cut.collect()
     val cutHeavy = duplicateStageGroups(cut).filter(_._3)

@@ -453,14 +453,6 @@ class AnalyticsSpec extends SparkSpecBase {
     assert(meta.forall(r => r.getInt(3) >= 1 && r.getInt(3) <= 256))
     val frames = Multimodal.sampleFrameOffsets(assets, 4)
     assert(frames.count() == 40)
-    // asset-table roundtrip: write, reload through the typed loader, same
-    // metadata
-    val dir = java.nio.file.Files.createTempDirectory("graft_assets").toString
-    assets.write.mode("overwrite").parquet(s"$dir/assets")
-    val reloaded = Multimodal.loadAssets(spark, s"$dir/assets")
-    val meta2 = Multimodal.binaryMeta(reloaded)
-    assert(meta2.exceptAll(Multimodal.binaryMeta(assets)).count() == 0)
-    assert(meta2.count() == 10)
   }
 
   test("image phash: base-brightness invariance, slope sensitivity, dedup grouping") {

@@ -585,19 +585,6 @@ class CurationSpec extends SparkSpecBase {
       .count() == 0)
   }
 
-  test("curation audit is identical under the parquet materializer") {
-    // the durable lineage-cut hook (the real-cluster path) must not change
-    // a single verdict — same contract MaterializeSpec pins for Dedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_audit_mat").toString
-    val sub = docs.filter(col("doc_id") < 200)
-    val local = Curation.curationAudit(sub)
-    val durable = Curation.curationAudit(
-      sub, materialize = graft.engine.Materialize.parquet(dir))
-    assert(local.count() == durable.count())
-    assert(local.exceptAll(durable).count() == 0 &&
-      durable.exceptAll(local).count() == 0)
-  }
-
   test("source mix sample: quotas respect the sqrt tempering and ranks are contiguous") {
     val out = Curation.sourceMixSample(docs, targetTotal = 100)
     // per-source selection is a prefix by doc_id: max rank == row count

@@ -91,7 +91,6 @@ class FkGraphSpec extends AnyFunSuite {
     val uf = new UnionFind
     (1 to 100).foreach(i => uf.makeSet(s"t$i"))
     (1 until 100).foreach(i => uf.link(s"t$i", s"t${i + 1}"))
-    assert(uf.find("t1") == uf.find("t100"))
-    assert(uf.componentsCount == 1)
+    assert((1 to 100).map(i => uf.find(s"t$i")).toSet == Set(uf.find("t1")))
   }
 }

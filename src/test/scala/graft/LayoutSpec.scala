@@ -5,6 +5,14 @@ import org.apache.spark.sql.functions._
 
 class LayoutSpec extends SparkSpecBase {
 
+  /** `ev` clustered on the 6-bit Z-curve over (u6, v6) in 16 partitions:
+    * range-partitioned by `Layout.zValue`, sorted within partitions.
+    */
+  private def zordered(ev: org.apache.spark.sql.DataFrame) =
+    ev.withColumn("z", Layout.zValue(col("u6"), col("v6"), bits = 6))
+      .repartitionByRange(16, col("z"))
+      .sortWithinPartitions(col("z"))
+
   test("z-value interleaves bits (known points)") {
     import spark.implicits._
     val df = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 5L), (65535L, 65535L))
@@ -71,8 +79,7 @@ class LayoutSpec extends SparkSpecBase {
     val ev = raw.select(col("event_id"),
       floor(col("user_id") * 64.0 / (umax + 1)).cast("long").as("u6"),
       floor(col("vb") * 64.0 / (vmax + 1)).cast("long").as("v6"))
-    val z = Layout.zorderBy(ev, col("u6"), col("v6"),
-      bits = 6, numPartitions = 16)
+    val z = zordered(ev)
     val stats = z.withColumn("pid", spark_partition_id())
       .groupBy(col("pid")).agg(
         (max("u6") - min("u6")).as("uw"),
@@ -106,8 +113,7 @@ class LayoutSpec extends SparkSpecBase {
       floor(col("user_id") * 64.0 / (umax + 1)).cast("long").as("u6"),
       floor(col("vb") * 64.0 / (vmax + 1)).cast("long").as("v6"))
     val dir = Files.createTempDirectory("graft_zorder_prune").toString
-    Layout.zorderBy(ev, col("u6"), col("v6"), bits = 6, numPartitions = 16)
-      .drop("z").write.parquet(s"$dir/zordered")
+    zordered(ev).drop("z").write.parquet(s"$dir/zordered")
     ev.repartition(16, col("event_id")).write.parquet(s"$dir/unsorted")
     def scannedRows(path: String): Long = {
       val df = spark.read.parquet(path)

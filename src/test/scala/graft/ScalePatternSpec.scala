@@ -1,7 +1,7 @@
 package graft
 
 import graft.analytics.Similarity
-import graft.engine.{Catalog, Ops}
+import graft.engine.Ops
 import org.apache.spark.sql.functions._
 
 /** Tests for the cluster-scale layout patterns: bucketed co-located joins,
@@ -9,14 +9,21 @@ import org.apache.spark.sql.functions._
   */
 class ScalePatternSpec extends SparkSpecBase {
 
+  /** Write `df` into the session catalog as `table`, bucketed and sorted by
+    * `key` into 4 buckets.
+    */
+  private def writeBucketed(df: org.apache.spark.sql.DataFrame, table: String,
+      key: String): Unit =
+    df.write.mode("overwrite").format("parquet")
+      .bucketBy(4, key).sortBy(key).saveAsTable(table)
+
   test("bucketed tables join without a shuffle on either side") {
     // tables land in the default ./spark-warehouse (gitignored)
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
     val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    Catalog.saveBucketed(orders, "b_orders", Seq("o_orderkey"), 4)
-    Catalog.saveBucketed(
-      lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-      "b_lineitem", Seq("o_orderkey"), 4)
+    writeBucketed(orders, "b_orders", "o_orderkey")
+    writeBucketed(lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
+      "b_lineitem", "o_orderkey")
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -37,7 +44,7 @@ class ScalePatternSpec extends SparkSpecBase {
     // HashPartitioning, so the custom operator plans with NO Exchange —
     // the property that makes repeated per-key top-k queries cheap at scale
     val events = spark.read.parquet(s"$sfDir/events.parquet")
-    Catalog.saveBucketed(events, "b_events", Seq("user_id"), 4)
+    writeBucketed(events, "b_events", "user_id")
     try {
       val topk = graft.plans.TopKPerKey.topKPerKey(
         spark.table("b_events"), Seq("user_id"), Seq("ts", "event_id"), 3)

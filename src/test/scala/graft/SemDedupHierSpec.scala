@@ -37,8 +37,7 @@ class SemDedupHierSpec extends SparkSpecBase {
     // fixture-distribution property (some split must cut a >= minSim
     // pair) and could fail on a regenerated fixture with correct code
     val leaves = Similarity.semDedupHierLeaves(emb,
-      topCells = 4, maxCellPop = 64L, subCells = 4, iters = 2,
-      trainMod = 4, materialize = graft.engine.Materialize.local)
+      topCells = 4, maxCellPop = 64L, subCells = 4, iters = 2, trainMod = 4)
     val nTop = leaves.select("cell_id").distinct().count()
     val nLeaf = leaves.select("cell_id", "sub_id").distinct().count()
     assert(nLeaf > nTop,
