@@ -11,12 +11,9 @@ object Verify {
     // Key-parity gate (VERDICT r13 #6): every declared query must carry an
     // oracle and every oracle a query, so a future key addition cannot
     // silently ship unverified (a missing oracle downgrades the driver's
-    // check to rows-only with no visible signal). Keys that are
-    // INTENTIONALLY rows-only must be listed in SPARK_GRAFT_ROWS_ONLY.
+    // check to rows-only with no visible signal).
     locally {
-      val rowsOnlyOk = sys.env.getOrElse("SPARK_GRAFT_ROWS_ONLY", "")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSet
-      val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- rowsOnlyOk
+      val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
       val orphan = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
       println(s"[verify] key parity: queries=${SparkEntry.queries.size} " +
         s"oracles=${SparkEntry.oracleSql.size}")

@@ -607,8 +607,8 @@ object EventsAnalytics {
     *
     * All integer: values are exact DECIMAL(18,2) cents, the stat is a
     * cross-multiplication (no mean, no float). One window pass per type
-    * (prefix sums + the per-type totals), then a grouped top-1 — the
-    * row_number rewrite turns it into the bounded TopKPerKey operator.
+    * (prefix sums + the per-type totals), then a grouped top-1 over a
+    * `row_number` window.
     * The per-type total order is the inherent serial dimension of
     * change-point detection; at 100 TB shard the series (type, day) the
     * way the lateness profile does and maximize per shard.

@@ -183,21 +183,21 @@ object Sketches {
     * ties break on the token text, and the estimate is integer basis
     * points — every row replays exactly in SQL.
     *
-    * Shape: one (source, token)-distinct aggregate, a per-source window
-    * bounded by |sources| partitions, sketch relations are |sources|·k
-    * rows (broadcast everywhere), and only the EXACT ground-truth side —
-    * which an eval key needs anyway — touches the full token relation.
+    * Shape: one (source, token)-distinct aggregate, the per-source and
+    * per-pair k-smallest cuts on the bounded-heap TopKPerKey (it beat the
+    * `row_number` window on task CPU at sf0.1), sketch relations are
+    * |sources|·k rows (broadcast everywhere), and only the EXACT
+    * ground-truth side — which an eval key needs anyway — touches the
+    * full token relation.
     */
   def kmvOverlapEval(docs: DataFrame, k: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    import graft.plans.TopKPerKey.topKPerKey
     val toks = docs
       .select(col("source"), explode(tokens(col("text"))).as("tk"))
       .distinct()
       .withColumn("h",
         expr("CAST(conv(substring(md5(tk), 1, 8), 16, 10) AS BIGINT)"))
-    val sk = toks.withColumn("rn", row_number().over(
-        Window.partitionBy(col("source")).orderBy(col("h"), col("tk"))))
-      .filter(col("rn") <= k)
+    val sk = topKPerKey(toks, Seq("source"), Seq("h", "tk"), k)
       .select(col("source"), col("h"), col("tk"))
     val srcs = sk.select(col("source")).distinct()
     val pairs = srcs.toDF("source_a")
@@ -208,10 +208,7 @@ object Sketches {
       .union(pairs.join(broadcast(sk.toDF("source_b", "h", "tk")), Seq("source_b"))
         .select(col("source_a"), col("source_b"), col("h"), col("tk")))
       .distinct()
-    val ranked = cand.withColumn("rn", row_number().over(
-        Window.partitionBy(col("source_a"), col("source_b"))
-          .orderBy(col("h"), col("tk"))))
-      .filter(col("rn") <= k)
+    val ranked = topKPerKey(cand, Seq("source_a", "source_b"), Seq("h", "tk"), k)
     val inA = sk.select(col("source").as("source_a"), col("h"), col("tk"),
       lit(1L).as("in_a"))
     val inB = sk.select(col("source").as("source_b"), col("h"), col("tk"),

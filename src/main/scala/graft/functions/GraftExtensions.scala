@@ -5,19 +5,25 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-/** The one install of the graft SQL functions. Listed in
+/** The one install of the graft SQL functions and of the grouped top-k
+  * planner strategy. Listed in
   * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
   * so Spark service-loads it into every session built on the classpath —
   * [[graft.Session]]'s and any other — and sessions forked with
-  * `newSession()` share it. No call site registers a function.
+  * `newSession()` share it. No call site registers a function or mutates
+  * its session's planner or optimizer.
   *
-  * Plan-changing extensions (the grouped top-k strategy and its
-  * `row_number` rewrite) are deliberately not injected here: they stay
-  * opt-in per session through [[graft.plans.TopKPerKey.install]].
+  * [[graft.plans.TopKPerKeyStrategy]] plans only the
+  * [[graft.plans.TopKPerKey]] logical node, which nothing but
+  * [[graft.plans.TopKPerKey.topKPerKey]] builds; for every other plan it
+  * returns no candidate, so injecting it changes no plan that lacks that
+  * node, and a key's plan does not depend on which keys ran before it.
   */
 class GraftExtensions extends SparkSessionExtensionsProvider {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(e.injectFunction)
+    e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
+  }
 }
 
 object GraftExtensions {

@@ -257,32 +257,13 @@ object TopKPerKey {
     }
   }
 
-  /** Register the strategy (and the row_number rewrite rule) in a session —
-    * the only way either is installed; `experimental` is the public escape
-    * hatch for both. `GraftExtensions` injects functions only, because
-    * injecting these into every session would change its plans.
-    *
-    * SESSION-WIDE side effect: once installed, every `row_number() ≤ k`
-    * idiom in the session plans through [[TopKPerKeyExec]] (identical
-    * results under a total order; rank-k ties — implementation-defined in
-    * both forms — may resolve differently). [[topKPerKey]] installs
-    * implicitly on first use; sessions that must not be touched should plan
-    * with a separate `spark.newSession()`. Synchronized: the check-then-
-    * append below must not race a concurrent first use.
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    if (!spark.experimental.extraOptimizations.contains(RowNumberTopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RowNumberTopKRewrite
-  }
-
   /** DataFrame API: the k smallest rows per key under `orderCols` ascending
     * (extend the column list with a tiebreaker to make the order total —
     * otherwise rank-k ties are implementation-defined, same as
-    * `row_number`). Registers the strategy in the session on first use.
+    * `row_number`). A descending order takes a negated column, as
+    * `Similarity.embeddingOutliers` does. The node plans through
+    * [[TopKPerKeyStrategy]], which `GraftExtensions` injects into every
+    * session.
     */
   def topKPerKey(
       df: DataFrame,
@@ -290,7 +271,6 @@ object TopKPerKey {
       orderCols: Seq[String],
       k: Int): DataFrame = {
     val spark = df.sparkSession
-    install(spark)
     val plan = df.queryExecution.analyzed
     def resolve(name: String): Attribute =
       plan.output.find(a => spark.sessionState.conf.resolver(a.name, name))

@@ -119,10 +119,13 @@ object SubsetQueries {
         subsetOutput(s, dir, "multi", multiTargetConfig)("customer")),
       "subset2_out_nation" -> ((s: SparkSession, dir: String) =>
         subsetOutput(s, dir, "multi", multiTargetConfig)("nation")),
-      // G8 — the end-of-run result tabulation as a relation
+      // G8 — the end-of-run result tabulation as a relation: the rows
+      // SubsetRunner prints
       "subset_report" -> ((s: SparkSession, dir: String) =>
-        graft.engine.Report.tabulateDf(
-          s, sourceFor(s, dir), subsetOutput(s, dir, "fixture", fixtureConfig)))) ++
+        s.createDataFrame(graft.engine.Report.tabulate(
+            sourceFor(s, dir), subsetOutput(s, dir, "fixture", fixtureConfig))
+          .map(r => (r.table, r.sourceRows, r.destRows, r.ratio)))
+          .toDF("table_name", "source_rows", "dest_rows", "ratio"))) ++
       Seq("partsupp", "lineitem", "orders", "part", "supplier").map { table =>
         s"subset3_out_$table" ->
           ((s: SparkSession, dir: String) => subsetOutput(

@@ -140,7 +140,10 @@ class ScalePatternSpec extends SparkSpecBase {
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      // the session's own partition count follows the core count; with
+      // too few partitions no join partition is skewed enough to split
+      "spark.sql.shuffle.partitions" -> "4")
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {

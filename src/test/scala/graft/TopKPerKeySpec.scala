@@ -1,6 +1,7 @@
 package graft
 
-import graft.plans.TopKPerKey
+import graft.plans.{TopKPerKey, TopKPerKeyStrategy}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,8 +13,8 @@ class TopKPerKeySpec extends SparkSpecBase {
 
   private lazy val events = spark.read.parquet(s"$sfDir/events.parquet")
 
-  private def windowTopK(k: Int) =
-    events
+  private def windowTopK(k: Int, in: DataFrame = events) =
+    in
       .withColumn("rn", row_number().over(
         Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))))
       .filter(col("rn") <= k)
@@ -59,66 +60,39 @@ class TopKPerKeySpec extends SparkSpecBase {
     assert(empty.count() == 0)
   }
 
-  test("optimizer rule rewrites the row_number window idiom to TopKPerKey") {
-    TopKPerKey.install(spark)
-    val idiom = events
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))))
-      .filter(col("rn") <= 3)
-      .select("user_id", "event_id")
-    val plan = idiom.queryExecution.executedPlan.toString
-    assert(plan.contains("TopKPerKey"), plan)
-    // no window exec ("Window [") and no residual group-limit either
-    assert(!plan.contains("Window ["), plan)
-    assert(!plan.contains("WindowGroupLimit"), plan)
-    // and the rewritten plan still returns the window answer
-    val direct = TopKPerKey.topKPerKey(
-      events, Seq("user_id"), Seq("ts", "event_id"), 3)
-      .select("user_id", "event_id")
-    assert(idiom.exceptAll(direct).count() == 0)
-    assert(idiom.count() == direct.count())
+  // expression ids and exchange plan ids count up per session build, so
+  // two plans of one query differ in them alone
+  private def normalized(plan: String): String =
+    plan.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+
+  test("a newSession plans the row_number window the same before and after topKPerKey") {
+    val fresh = spark.newSession()
+    val ev = fresh.read.parquet(s"$sfDir/events.parquet")
+    def windowPlan() =
+      normalized(windowTopK(3, ev).queryExecution.executedPlan.toString)
+    val before = windowPlan()
+    assert(before.contains("Window"), before)
+    assert(!before.contains("TopKPerKey"), before)
+    TopKPerKey.topKPerKey(ev, Seq("user_id"), Seq("ts", "event_id"), 3).count()
+    assert(windowPlan() == before)
   }
 
-  test("rewrite does NOT fire when rank is kept or function is rank()") {
-    TopKPerKey.install(spark)
-    val keepsRn = events
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))))
-      .filter(col("rn") <= 3)
-      .select("user_id", "event_id", "rn")
-    assert(keepsRn.queryExecution.executedPlan.toString.contains("Window"))
-    val usesRank = events
-      .withColumn("rk", rank().over(
-        Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))))
-      .filter(col("rk") <= 3)
+  test("topKPerKey plans and runs in a fresh newSession without changing its planner or optimizer") {
+    val fresh = spark.newSession()
+    def graftRules() = (
+      fresh.sessionState.planner.strategies
+        .filter(_.getClass.getName.startsWith("graft.")),
+      fresh.sessionState.optimizer.batches.flatMap(_.rules)
+        .filter(_.getClass.getName.startsWith("graft.")))
+    // the one graft strategy is the injected one; no graft optimizer rule
+    assert(graftRules() == (Seq(TopKPerKeyStrategy), Nil))
+    val ev = fresh.read.parquet(s"$sfDir/events.parquet")
+    val got = TopKPerKey.topKPerKey(ev, Seq("user_id"), Seq("ts", "event_id"), 3)
       .select("user_id", "event_id")
-    assert(usesRank.queryExecution.executedPlan.toString.contains("Window"))
-  }
-
-  test("descending order through the rewrite keeps the k largest") {
-    TopKPerKey.install(spark)
-    val idiom = events
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("user_id")
-          .orderBy(col("value").desc, col("event_id"))))
-      .filter(col("rn") <= 2)
-      .select("user_id", "event_id")
-    assert(idiom.queryExecution.executedPlan.toString.contains("TopKPerKey"))
-    val got = idiom.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // oracle: the same window query with the rewrite UNinstalled
-    val saved = spark.experimental.extraOptimizations
-    val oracle =
-      try {
-        spark.experimental.extraOptimizations = Nil
-        events
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("user_id")
-              .orderBy(col("value").desc, col("event_id"))))
-          .filter(col("rn") <= 2)
-          .select("user_id", "event_id")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      } finally spark.experimental.extraOptimizations = saved
-    assert(got == oracle)
+    assert(got.queryExecution.executedPlan.toString.contains("TopKPerKey"))
+    assert(got.count() == windowTopK(3, ev).count())
+    assert(got.exceptAll(windowTopK(3, ev)).count() == 0)
+    assert(graftRules() == (Seq(TopKPerKeyStrategy), Nil))
   }
 
   test("works over a cached (columnar InMemoryRelation) child") {
